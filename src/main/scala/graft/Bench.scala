@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -64,13 +65,13 @@ object Bench {
     def loadAvg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString(",")
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     def stealTicks(): Long =
       try scala.io.Source.fromFile("/proc/stat").getLines()
         .find(_.startsWith("cpu "))
         .map(_.trim.split("\\s+").drop(1).lift(7).map(_.toLong).getOrElse(-1L))
         .getOrElse(-1L)
-      catch { case _: Throwable => -1L }
+      catch { case NonFatal(_) => -1L }
     final case class PassStats(gcMs: Long, heapMb: Long, cacheLeft: Int,
                                loadStart: String, loadEnd: String,
                                stealDelta: Long)
@@ -82,7 +83,7 @@ object Bench {
       val rs = (SparkEntry.queries ++ SparkEntry.benchExtra).toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); false
+          case NonFatal(e) => System.err.println(s"[bench] $name FAILED: $e"); false
         }
         val secs = (System.nanoTime() - t0) / 1e9
         // per-query isolation: no query may inherit (or pay GC pressure

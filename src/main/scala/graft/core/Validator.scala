@@ -29,11 +29,14 @@ trait Validator { self =>
   /** Chain composition — the reference's `FilterChain` `|` operator. */
   def |(next: Validator): Validator = Chain(self, next)
 
-  /** The chain's leaf filters in application order. Validate.column applies
-    * them with a projection barrier between steps: composing everything
-    * into one expression duplicates the (value-transforming) CASE of each
-    * step into every reference the next step makes — exponential tree
-    * growth with chain length. */
+  /** The chain's leaf filters in application order. `Validate.columns`
+    * applies them depth-wise: leaf `d` of every column's chain in one
+    * projection, with a projection between consecutive leaves — composing
+    * a chain into one expression duplicates the (value-transforming) CASE
+    * of each step into every reference the next step makes (exponential
+    * tree growth with chain length). Each leaf is generated into a method
+    * of its own, which keeps every method under HotSpot's 8,000-byte
+    * JIT limit however many columns are validated. */
   def flattened: Seq[Validator] = self match {
     case Chain(a, b) => a.flattened ++ b.flattened
     case other => Seq(other)
@@ -76,7 +79,7 @@ trait Validator { self =>
   /** Apply to an input column as ONE composed expression: returns
     * `struct(value, errors)`. Prefer `Validate.column` for DataFrames — it
     * applies chain steps behind per-step projections, which keeps
-    * expression size linear in chain length (see `Validate.column` docs);
+    * expression size linear in chain length (see `Validate.columns` docs);
     * this single-expression form grows ~3^steps and is meant for short
     * chains embedded inside other expressions. */
   def result(in: Column, key: String): Column = {

@@ -15,8 +15,12 @@ import graft.core.{Errs, Validator}
   *
   * Expression-size note: each field's chain composes into ONE expression
   * here (~3^steps growth per field) — keep per-field chains short (≤3
-  * steps). For heavy chains over top-level DataFrame columns, use
-  * `Validate.columns`, which applies steps behind linear projections.
+  * steps). The whole mapper is one step of its column's chain, so its
+  * generated code lands in one method, and a method over 8,000 bytes of
+  * bytecode is never JIT-compiled. For heavy chains over top-level
+  * DataFrame columns, use `Validate.columns`: it applies step `d` of every
+  * column's chain in one projection per chain depth (linear expression
+  * size) and generates each step into a method of its own.
   */
 case class FilterMapper(fieldMap: Seq[(String, Validator)]) extends Validator {
   require(fieldMap.nonEmpty, "FilterMapper needs at least one field")

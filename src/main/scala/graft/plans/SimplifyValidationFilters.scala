@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
+import graft.expressions.OwnMethod
 
 /** Optimizer rule: rewrite validation-split filters into plain predicates.
   *
@@ -20,7 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType}
   * as false — mirrored here by wrapping each branch condition in
   * `coalesce(cond, false)`. Rewrites only apply when the CASE has an else
   * branch (our error trees always do); anything unrecognized falls back to
-  * the original `size(..) == 0` comparison.
+  * the original `size(..) == 0` comparison. [[OwnMethod]] wrappers (one
+  * generated method per validation step) are looked through: they only
+  * place code, so an unbarriered chain pushed into the filter still
+  * rewrites and reaches the scan.
   */
 object SimplifyValidationFilters extends Rule[LogicalPlan] {
 
@@ -125,6 +129,7 @@ object SimplifyValidationFilters extends Rule[LogicalPlan] {
       // row fate as size(concat(..null..)) = null
       children.map(zeroTree).reduce(and)
     case Cast(child, _: ArrayType, _, _) => zeroTree(child)
+    case OwnMethod(child) => zeroTree(child)
     case CreateArray(items, _) =>
       if (items.isEmpty) Literal.TrueLiteral else Literal.FalseLiteral
     case Literal(value, _: ArrayType) if value != null =>
@@ -150,6 +155,7 @@ object SimplifyValidationFilters extends Rule[LogicalPlan] {
       val anyNonZero = children.map(nonZeroTree).reduce(or)
       and(defined, anyNonZero)
     case Cast(child, _: ArrayType, _, _) => nonZeroTree(child)
+    case OwnMethod(child) => nonZeroTree(child)
     case CreateArray(items, _) =>
       if (items.isEmpty) Literal.FalseLiteral else Literal.TrueLiteral
     case Literal(value, _: ArrayType) if value != null =>
@@ -168,6 +174,7 @@ object SimplifyValidationFilters extends Rule[LogicalPlan] {
       }
     case Concat(children) if children.nonEmpty => children.map(notNullTree).reduce(and)
     case Cast(child, _: ArrayType, _, _) => notNullTree(child)
+    case OwnMethod(child) => notNullTree(child)
     case CreateArray(_, _) => Literal.TrueLiteral
     case Literal(value, _) => if (value == null) Literal.FalseLiteral else Literal.TrueLiteral
     case other => IsNotNull(other)

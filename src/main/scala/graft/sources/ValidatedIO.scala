@@ -271,7 +271,9 @@ object ValidatedIO {
     // source scan + validator chain runs once, not once per split. Drop
     // the pushdown twin: it is a DIFFERENT (unpersisted) plan, so keeping
     // it would silently re-scan + re-validate for the valid split; under
-    // a persisted frame scan pushdown buys nothing anyway.
+    // a persisted frame scan pushdown buys nothing anyway. The twin is
+    // built only when `valid` reads it, so dropping it here means it is
+    // never built (no second set of validation projections to analyse).
     val cached = result.copy(df = result.df
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       pushedValid = None)
