@@ -1,35 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r16 (guide §2.2/§2.5): AQE's coalescer floors partitions at
-      // minPartitionSize (default 1m) — with parallelismFirst=true that
-      // floor is the ONLY thing deciding post-shuffle parallelism, and
-      // every sub-MB shuffle collapses to one partition. This suite's
-      // shuffles are byte-small but CPU-dense (regex scoring, levenshtein
-      // verification, array kernels), so the coalesced single task
-      // serializes the heaviest stage of exactly the most expensive
-      // queries (measured: q_fuzzy_join 3.9→1.1 s, q_entity_resolution
-      // 3.1→1.7 s, q_twopass 11→9 s). 64k keeps small-data parallelism;
-      // at production scale partitions are 100s of MB and a 64k-vs-1m
-      // floor is indistinguishable — nothing here encodes the core count.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // per-run warehouse: managed-table locations from a previous process
-      // must not leak into (or fail) this run's bucketed-write entries
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // warm up session machinery (codegen, parquet reader) so the first
     // timed query doesn't absorb ~5s of one-time JVM/session cost
     spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -51,10 +25,6 @@ object Bench {
     def cacheEntries(): Int =
       (if (spark.sharedState.cacheManager.isEmpty) 0 else 1) +
         spark.sparkContext.getPersistentRDDs.size
-    def clearState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // Container-health self-evidence (r13 verdict): three driver bench
     // artifacts (r10, r13) recorded degraded-container runs that a judge
     // rerun could not reproduce, and nothing in the artifact could prove
@@ -86,9 +56,7 @@ object Bench {
           case NonFatal(e) => System.err.println(s"[bench] $name FAILED: $e"); false
         }
         val secs = (System.nanoTime() - t0) / 1e9
-        // per-query isolation: no query may inherit (or pay GC pressure
-        // for) a predecessor's cached state
-        clearState()
+        Harness.clearState(spark)
         name -> (if (ok) secs else -secs)
       }
       val steal1 = stealTicks()

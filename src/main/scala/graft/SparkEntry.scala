@@ -26,26 +26,20 @@ object SparkEntry {
     * (`StreamingValidate.ensureEventTime`). */
   private def T(s: SparkSession, dir: String, n: String): DataFrame = {
     val df0 = s.read.parquet(s"$dir/$n.parquet")
-    val df =
-      if (n == "events" && df0.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else df0
-    if (s.conf.get("spark.graft.scan.rebalance", "false").toBoolean)
-      rebalanceScan(s, df, s"$dir/$n.parquet")
-    else df
+    if (n == "events" && df0.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else df0
   }
 
-  /** [[T]] + [[rebalanceScan]]: the opt-in loader for queries whose
-    * pre-exchange map work is heavy enough that splitting the
-    * single-row-group bench scan wins (measured per query, r16). When the
-    * global `spark.graft.scan.rebalance` experiment flag is on, [[T]]
-    * already applied the rebalance — don't stack a second pass (r16
-    * ADVICE). */
-  private def TR(s: SparkSession, dir: String, n: String): DataFrame = {
-    val df = T(s, dir, n)
-    if (s.conf.get("spark.graft.scan.rebalance", "false").toBoolean) df
-    else rebalanceScan(s, df, s"$dir/$n.parquet")
-  }
+  /** [[T]] + [[rebalanceScan]]: the loader for queries whose pre-exchange
+    * map work is heavy enough that splitting an underparallelized scan
+    * wins (measured per query, r16). */
+  private def TR(s: SparkSession, dir: String, n: String): DataFrame =
+    rebalanceScan(s, T(s, dir, n), s"$dir/$n.parquet")
+
+  /** Parquet bytes below which a scan split is not worth its own task, so
+    * dimension tables don't fan out into empty tasks. */
+  private val MinTaskBytes = 8192L
 
   /** r16 (guide §2.5 "input skew: one huge unsplittable file"): the
     * testdata tables are SINGLE-row-group parquet files, so every scan is
@@ -53,21 +47,18 @@ object SparkEntry {
     * hashing, URL parsing) serializes on one core regardless of
     * `local[N]`. Repartition right after the read when — and only when —
     * the scan is underparallelized: the target is derived from input SIZE
-    * (≥ `spark.graft.scan.minTaskBytes`, default 8 KB of parquet per
-    * task, so dimension tables don't fan out into empty tasks) and capped
-    * at the session's default parallelism. At production scale a table
-    * arrives as many files / row groups ≥ cores, `parts ≥ target`, and
-    * this is a no-op — nothing here is tuned to the local core count.
+    * (≥ [[MinTaskBytes]] of parquet per task) and capped at the session's
+    * default parallelism. At production scale a table arrives as many
+    * files / row groups ≥ cores, the scan already splits ≥ target ways,
+    * and this is a no-op — nothing here is tuned to the local core count.
     *
     * Measured A/B over the whole suite (OPTIMIZATION_r16.md): the extra
     * round-robin exchange pays off only where the per-row map work is
     * heavy (regex scoring, covariance, rerank kernels) and LOSES ~0.1–0.3 s
     * per query everywhere else — so it is opt-in per query ([[TR]]),
-    * not the [[T]] default. `spark.graft.scan.rebalance=true` forces it
-    * globally for experiments. */
-  private def rebalanceScan(s: SparkSession, df: DataFrame, path: String): DataFrame = {
+    * not the [[T]] default. */
+  private[graft] def rebalanceScan(s: SparkSession, df: DataFrame, path: String): DataFrame = {
     import scala.util.control.NonFatal
-    val minTaskBytes = s.conf.get("spark.graft.scan.minTaskBytes", "8192").toLong
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val conf = s.sparkContext.hadoopConfiguration
@@ -79,25 +70,27 @@ object SparkEntry {
       }
       val bytes = files.map(_.getLen).sum
       val target = math.min(s.sparkContext.defaultParallelism.toLong,
-        math.max(1L, bytes / minTaskBytes)).toInt
+        math.max(1L, bytes / MinTaskBytes)).toInt
       if (target <= 1 || files.length >= target) return df
-      // Achievable scan parallelism WITHOUT a shuffle is the row-group
-      // count, not `df.rdd.getNumPartitions` (r16 verdict + ADVICE):
-      // byte-range splits of a single-row-group file yield ONE non-empty
-      // partition — exactly the skew this helper targets — and forcing the
-      // plan→RDD conversion just to count splits pays a throwaway physical
-      // planning per table load. Footer reads happen only on the
-      // few-files-than-cores branch above, so a production table (many
-      // files ≥ cores) never pays them.
+      // Achievable scan parallelism WITHOUT a shuffle: a split never
+      // cuts a row group, so the row-group count bounds it (byte-range
+      // splits of a single-row-group file yield ONE non-empty partition);
+      // and Spark packs row groups into splits of up to maxPartitionBytes,
+      // so a small file with many small row groups is still one
+      // partition. Counting from footers instead of
+      // `df.rdd.getNumPartitions` avoids a throwaway physical planning per
+      // table load; footer reads happen only on the fewer-files-than-cores
+      // branch above, so a production table never pays them.
       val rowGroups = files.map { f =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
         try r.getRowGroups.size finally r.close()
       }.sum
-      if (rowGroups >= target) df else df.repartition(target)
+      val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
+      val splits = math.min(rowGroups.toLong, (bytes + maxSplit - 1) / maxSplit)
+      if (splits >= target) df else df.repartition(target)
     } catch { case NonFatal(e) =>
-      // sizing failure degrades to "no rebalance", loudly (the old silent
-      // `case _: Throwable => 0L` also swallowed fatal errors — r16 ADVICE)
+      // sizing failure degrades to "no rebalance", loudly
       System.err.println(s"[graft] rebalanceScan: could not size $path ($e); skipping")
       df
     }

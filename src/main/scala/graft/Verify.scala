@@ -1,26 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+  *
+  * `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]` */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // keep the verify session's planner aligned with Bench (r16):
-      // same AQE partition-size floor, so the hash-checked plans are the
-      // ones the bench actually times
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [q1,q2,...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    // an optional name list dumps only those queries (the inner loop
+    // while changing a few of them); no list dumps every query
+    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val queries = only.fold(SparkEntry.queries) { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      SparkEntry.queries.filter { case (n, _) => names(n) }
+    }
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // a crashed query must be LOUD in the artifacts, not just on stderr:
     // in round 9 a thrown query was simply absent from the correctness
@@ -33,7 +31,7 @@ object Verify {
     // return rows at sf0.01 unless explicitly whitelisted as
     // empty-by-design; violations land in the failure manifest.
     val emptyByDesign = Set.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -49,12 +47,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name -> String.valueOf(e.getMessage)
       }
-      // per-query isolation (r10 verdict): a 96-query session must not
-      // accumulate cached state across queries — clear Dataset-level
-      // caches and any RDD-level storage (persists / checkpoint pins the
-      // ContextCleaner hasn't reclaimed yet)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.clearState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -68,7 +61,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (n, _) => queries.contains(n) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // failure manifest: always written (empty object = clean run), so a

@@ -26,8 +26,7 @@ import graft.ops.{Clusters, Dedup, TextAnalysis}
 object TrainingDataPipeline {
 
   def curate(docs: DataFrame, minQuality: Double = 0.3,
-             nearDupThreshold: Double = 0.9,
-             materializeIntermediate: Boolean = true): DataFrame = {
+             nearDupThreshold: Double = 0.9): DataFrame = {
     // 1. validate/clean: reference-style chains, dropping irreparable rows
     val validated = Validate(docs,
       "text" -> (Macros.cleanText | F.MinLength(20)),
@@ -56,9 +55,7 @@ object TrainingDataPipeline {
     // pipeline checkpoints to storage. Pinned, not persisted: a persist
     // here leaked into the session cacheManager with no releasing caller
     // (r10 verdict) — the pin dies with the returned frame's reference.
-    val exactDeduped =
-      if (materializeIntermediate) graft.ops.Checkpoints.pin(exactDeduped0).df
-      else exactDeduped0
+    val exactDeduped = graft.ops.Checkpoints.pin(exactDeduped0).df
 
     // 5. near-dup removal, cluster-resolved: candidate pairs → connected
     // components → keep exactly the min-id representative per transitive

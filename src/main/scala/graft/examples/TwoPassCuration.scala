@@ -21,11 +21,11 @@ import org.apache.spark.sql.functions._
   * Scale shape = the sum of its published parts: first pass ~7 exchanges
   * (each skew-bounded, see [[WebCrawlCuration]]), second pass 2 shuffles +
   * the band join + pair-sized cluster resolution. The first-pass output is
-  * persisted by its own `materializeIntermediate`; the second pass
-  * persists its exact-deduped set before the LSH fan-out. Duplication
-  * invariance (re-crawling pages 10× must not change the curated corpus)
-  * is spec-pinned end-to-end in `TwoPassCurationSpec` and wall-time-smoked
-  * in `Test/runMain graft.tools.TwoPassSmoke` over 10×-duplicated sf0.1
+  * pinned at the seam; the second pass pins its exact-deduped set before
+  * the LSH fan-out. Duplication invariance (re-crawling pages 10× must
+  * not change the curated corpus) is spec-pinned end-to-end in
+  * `TwoPassCurationSpec` and wall-time-smoked in
+  * `Test/runMain graft.tools.TwoPassSmoke` over 10×-duplicated sf0.1
   * (numbers in SCALE.md "two-pass composition"); the harness runs the
   * composition as `q_twopass` (rows-only — LSH bucket membership is not
   * SQL-mirrorable — content-pinned in `RowsOnlyPinSpec`).
@@ -42,13 +42,11 @@ object TwoPassCuration {
              htmlInput: Boolean = false,
              minQuality: Double = 0.3,
              nearDupThreshold: Double = 0.9,
-             materializeIntermediate: Boolean = true,
              spanK: Int = 0): DataFrame = {
     val first0 = WebCrawlCuration.curate(crawl, blockedDomains,
       idCol = "doc_id", urlCol = urlCol, textCol = textCol,
       boilerplateMinDocs = boilerplateMinDocs,
       delim = delim, joinSep = joinSep,
-      materializeIntermediate = materializeIntermediate,
       htmlInput = htmlInput, spanK = spanK)
     // pinned HANDOFF at the seam (r13 verdict): without it the second
     // pass's plan embeds the ENTIRE first-pass tree (boilerplate
@@ -59,17 +57,14 @@ object TwoPassCuration {
     // the curated-survivor seam (output-sized, the cheapest point in the
     // whole pipeline) and truncates lineage — in production this is
     // where the first pass lands in storage anyway.
-    val first =
-      if (materializeIntermediate) graft.ops.Checkpoints.pin(first0).df
-      else first0
+    val first = graft.ops.Checkpoints.pin(first0).df
     // the seam: first-pass cleaned text becomes the second pass's input
     // text; lang is absent in a raw crawl — Optional("und") fills it
     val docs = first
       .withColumnRenamed("text_clean", "text")
       .withColumn("lang", lit(null).cast("string"))
     TrainingDataPipeline.curate(docs, minQuality = minQuality,
-        nearDupThreshold = nearDupThreshold,
-        materializeIntermediate = materializeIntermediate)
+        nearDupThreshold = nearDupThreshold)
       .select(col("doc_id"), col("url_canonical"), col("domain"),
         col("text"), col("lang_guess"), col("quality"), col("n_tokens"))
   }

@@ -60,7 +60,6 @@ object WebCrawlCuration {
              textCol: String = "text",
              boilerplateMinDocs: Long = 3L,
              delim: String = "\n", joinSep: String = "\n",
-             materializeIntermediate: Boolean = true,
              htmlInput: Boolean = false,
              spanK: Int = 0,
              robotsRules: Option[DataFrame] = None): DataFrame = {
@@ -86,9 +85,7 @@ object WebCrawlCuration {
     // Pinned, not persisted: a persist here leaked into the session
     // cacheManager with no releasing caller (r10 verdict) — the pin's
     // storage lifetime is the returned frame's reference.
-    val byUrl =
-      if (materializeIntermediate) graft.ops.Checkpoints.pin(byUrl0).df
-      else byUrl0
+    val byUrl = graft.ops.Checkpoints.pin(byUrl0).df
 
     // 3. per-domain boilerplate (returns idCol + text_clean; re-join the
     // surviving ids back to their URL metadata — id-keyed, the same

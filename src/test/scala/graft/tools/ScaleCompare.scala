@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness
 
 /** sf0.1-vs-sf1 NATURAL-growth scaling comparison (r14 verdict ask #1) —
   * runs over [[GenScale]] output (same generator, 10× the scale knob, so
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *     universe, where the replication-era "equal at both scales" only
   *     holds for the genuinely input-independent tables.
   *
-  * Run: sbt "Test/runMain graft.tools.ScaleCompare /tmp/gensf/g0.1 /tmp/gensf/g1"
+  * Run: SPARK_GRAFT_CPUS=32 sbt "Test/runMain graft.tools.ScaleCompare /tmp/gensf/g0.1 /tmp/gensf/g1"
   */
 object ScaleCompare {
 
@@ -36,27 +36,15 @@ object ScaleCompare {
     require(args.length >= 2, "usage: ScaleCompare <smallDir> <bigDir>")
     val (small, big) = (args(0), args(1))
     val only = if (args.length > 2) args(2).split(",").toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the tables are single-FILE parquet (the driver layout, which the
-      // streaming pathGlobFilter queries require) — at g1 a 120 MB file
-      // is ONE input split under the 128 MB default, so a default-config
-      // run measures file count, not operator scaling (q_corr_matrix
-      // went 7.5× from a 1-task scan). A 100 TB deployment has thousands
-      // of splits; 4 MB splits give both scales that shape locally.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
+    // the tables are single-FILE parquet (the driver layout, which the
+    // streaming pathGlobFilter queries require) — at g1 a 120 MB file
+    // is ONE input split under the 128 MB default, so a default-config
+    // run measures file count, not operator scaling (q_corr_matrix
+    // went 7.5× from a 1-task scan). A 100 TB deployment has thousands
+    // of splits; 4 MB splits give both scales that shape locally.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
 
-    def clear(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
     def timed(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime()
       val rows = f
@@ -68,8 +56,8 @@ object ScaleCompare {
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         graft.SparkEntry.benchExtra(name))
-      val (ts, rs) = timed(fn(spark, small).count()); clear()
-      val (tb, rb) = timed(fn(spark, big).count()); clear()
+      val (ts, rs) = timed(fn(spark, small).count()); Harness.clearState(spark)
+      val (tb, rb) = timed(fn(spark, big).count()); Harness.clearState(spark)
       println(f"[cmp] $name,$ts%.2f,$rs,$tb%.2f,$rb,${tb / ts}%.2f,${rb.toDouble / rs}%.2f")
     }
 
@@ -146,7 +134,7 @@ object ScaleCompare {
         s"resample=$rs (=users×span $grid) labelprop=$lp (=nodes $nodes) " +
         s"rfm=$rfm (=customers $custs) iso_bins=$iso holt_keys=$ho " +
         s"seasonal=$se (=5×$days) theil_keys=$tsn pop_months=$pop (=$months)")
-      clear()
+      Harness.clearState(spark)
 
       // ---- sketch/ANN family (the dedup-side state the replication
       // smokes also froze): CMS cell table bounded by depth×width, IVF
@@ -172,7 +160,7 @@ object ScaleCompare {
         .distinct().count()
       println(s"[inv] $label sketch/ANN: cms_cells=$cms (≤256) " +
         s"ivf_cells=$ivfCells (≤16 centroids) vocab_types=$vocab (grows)")
-      clear()
+      Harness.clearState(spark)
     }
     println("[cmp] done")
     spark.stop()

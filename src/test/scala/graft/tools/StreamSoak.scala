@@ -18,13 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamSoak {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
