@@ -50,14 +50,14 @@ object Bench {
     def pass(): (Seq[(String, Double)], PassStats) = {
       val gc0 = gcMillis()
       val (load0, steal0) = (loadAvg(), stealTicks())
-      val rs = (SparkEntry.queries ++ SparkEntry.benchExtra).toSeq.sortBy(_._1).map { case (name, fn) =>
+      val rs = SparkEntry.cases.sortBy(_.name).map { c =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
-          case NonFatal(e) => System.err.println(s"[bench] $name FAILED: $e"); false
+        val ok = try { c.build(spark, sfDir).count(); true } catch {
+          case NonFatal(e) => System.err.println(s"[bench] ${c.name} FAILED: $e"); false
         }
         val secs = (System.nanoTime() - t0) / 1e9
         Harness.clearState(spark)
-        name -> (if (ok) secs else -secs)
+        c.name -> (if (ok) secs else -secs)
       }
       val steal1 = stealTicks()
       val stealDelta = if (steal0 < 0 || steal1 < 0) -1L else steal1 - steal0

@@ -10,11 +10,6 @@ object Harness {
 
   /** `cpus` local cores; by default `SPARK_GRAFT_CPUS`, else 4. */
   def session(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
-    // per-run warehouse: managed-table locations from a previous process
-    // must not leak into (or fail) this run's bucketed writes, and
-    // nothing lands in the working directory or outlives the run
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
     val spark = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
@@ -33,10 +28,20 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
+      .config("spark.sql.warehouse.dir", tempWarehouse())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** A per-run `spark.sql.warehouse.dir`: managed-table locations from a
+    * previous process must not leak into (or fail) this run's bucketed
+    * writes, and nothing lands in the working directory or outlives the
+    * JVM. */
+  private[graft] def tempWarehouse(): String = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
+    warehouse.toString
   }
 
   /** Drop Dataset-level caches (cacheManager) and RDD-level storage

@@ -1,8 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+import graft.registry.{Case, Check}
+/** Correctness dump: each checked case's result (every [[registry.Case]]
+  * except the timed-only ones) → parquet, plus oracle_sql.json, for the
+  * DuckDB compare (`tools/check_oracle.py`).
   *
   * `runMain graft.Verify <sfDir> <outDir> [q1,q2,...]` */
 object Verify {
@@ -10,13 +12,14 @@ object Verify {
     require(args.length == 2 || args.length == 3,
       "usage: Verify <sfDir> <outDir> [q1,q2,...]")
     val (sfDir, outDir) = (args(0), args(1))
+    val checked = SparkEntry.cases.filter(_.check != Check.TimedOnly)
     // an optional name list dumps only those queries (the inner loop
     // while changing a few of them); no list dumps every query
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only.fold(SparkEntry.queries) { names =>
-      val unknown = names -- SparkEntry.queries.keySet
+    val cases = only.fold(checked) { names =>
+      val unknown = names -- checked.map(_.name)
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-      SparkEntry.queries.filter { case (n, _) => names(n) }
+      checked.filter(c => names(c.name))
     }
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
@@ -28,17 +31,15 @@ object Verify {
     // EMPTY at the verify scale makes its oracle compare vacuous — two
     // empty sets hash-match even when the operator is broken (q_triangles
     // and q_kaplan_meier shipped exactly that in r13). Every query must
-    // return rows at sf0.01 unless explicitly whitelisted as
-    // empty-by-design; violations land in the failure manifest.
-    val emptyByDesign = Set.empty[String]
-    queries.foreach { case (name, fn) =>
+    // return rows at sf0.01; violations land in the failure manifest.
+    cases.foreach { c =>
+      val name = c.name
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        c.build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // metadata-only count of the just-written footers — cheap, and it
         // checks what the DRIVER will read, not a recomputation
-        if (!emptyByDesign(name) &&
-            spark.read.parquet(s"$outDir/$name").count() == 0L) {
+        if (spark.read.parquet(s"$outDir/$name").count() == 0L) {
           System.err.println(s"[verify] $name returned 0 rows (vacuous oracle compare)")
           failed += name -> "empty result at verify scale (vacuous oracle compare)"
         }
@@ -61,8 +62,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter { case (n, _) => queries.contains(n) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = cases.collect { case Case(name, Check.Oracle(sql)) => s"${q(name)}: ${q(sql)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // failure manifest: always written (empty object = clean run), so a
     // missing result directory is distinguishable from a never-registered

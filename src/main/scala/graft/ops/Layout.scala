@@ -21,8 +21,7 @@ object Layout {
     * tables bucketed on the same keys with the same bucket count equi-join
     * WITHOUT any shuffle — the scale path for repeated fact↔fact joins. */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    keys: Seq[String], sortCols: Seq[String] = Nil,
-                    align: Option[Boolean] = None): Unit = {
+                    keys: Seq[String], sortCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     // A managed table's LOCATION can outlive its catalog entry (previous
     // process exited; in-memory catalog reset) — saveAsTable(Overwrite) on
@@ -39,30 +38,38 @@ object Layout {
       name.toLowerCase(java.util.Locale.ROOT))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    // r16 (guide §6 small files): an unaligned input writes one file per
-    // (task, bucket) pair — numPartitions × buckets tiny files (256 for
-    // the bm25 index at bench scale), slow to commit and slow to read
-    // back. Repartitioning on the bucket keys first colocates each bucket
-    // in exactly one task (bucketBy's pmod(murmur3) IS HashPartitioning),
-    // so the table lands as `buckets` well-sized files — but it also CAPS
-    // write parallelism at `buckets`, which at 100 TB with a modest bucket
-    // count funnels the table through few huge tasks (guide §5 spill
-    // risk). GUARD (r16 verdict): align only when the optimizer's size
-    // estimate says each bucket stays under
-    // `spark.graft.layout.alignMaxBucketBytes` (default 512 MB — the
-    // guide-§6 output-file sweet spot); unknown/huge estimates land on the
-    // keep-parallelism side. `align` overrides the estimate either way.
-    val doAlign = align.getOrElse {
-      val maxBucketBytes = BigInt(spark.conf
-        .get("spark.graft.layout.alignMaxBucketBytes", (512L << 20).toString).toLong)
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBucketBytes * buckets
-    }
-    val aligned = if (doAlign) df.repartition(buckets, keys.map(col): _*) else df
+    val aligned =
+      if (alignBuckets(df.queryExecution.optimizedPlan.stats.sizeInBytes, buckets, sortCols.nonEmpty))
+        df.repartition(buckets, keys.map(col): _*)
+      else df
     val w = aligned.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, keys.head, keys.tail: _*)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(table)
   }
+
+  /** Largest estimated bucket [[writeBucketed]] still aligns: the guide-§6
+    * output-file sweet spot. */
+  private[graft] val AlignMaxBucketBytes: Long = 512L << 20
+
+  /** Whether [[writeBucketed]] repartitions on the bucket keys before
+    * writing. An unaligned input writes one file per (task, bucket) pair —
+    * numPartitions × buckets tiny files (256 for the bm25 index at bench
+    * scale), slow to commit and slow to read back. Repartitioning on the
+    * bucket keys colocates each bucket in exactly one task (bucketBy's
+    * pmod(murmur3) IS HashPartitioning), so the table lands as `buckets`
+    * files — but it also caps write parallelism at `buckets`, which at
+    * 100 TB with a modest bucket count funnels the table through few huge
+    * tasks (guide §5 spill risk). So an unsorted write aligns only when
+    * the optimizer's size estimate keeps each bucket under
+    * [[AlignMaxBucketBytes]]; unknown or huge estimates keep the input's
+    * parallelism (the estimate can overshoot badly after joins and
+    * aggregates, so such inputs may skip alignment they could afford).
+    * A sorted write always aligns: a bucket split over
+    * several files is sorted only within each file, so readers lose the
+    * bucket's sort order. */
+  private[graft] def alignBuckets(sizeInBytes: BigInt, buckets: Int, sorted: Boolean): Boolean =
+    sorted || sizeInBytes <= BigInt(AlignMaxBucketBytes) * buckets
 
   /** Salt the skewed (fact) side: deterministic salt derived from a row id
     * so re-runs are stable. Join key becomes (key, salt). */

@@ -153,14 +153,21 @@ object QualityRules {
 
   // ------------------------------------------------- Repetition (n-grams)
 
+  /** `f(x)` with `x` evaluated once per row. Spark does not eliminate
+    * common subexpressions inside higher-order-function lambdas, so an
+    * array a lambda body refers to is rebuilt on every iteration unless it
+    * arrives as a lambda variable itself. */
+  private def bind(x: Column)(f: Column => Column): Column =
+    element_at(transform(array(x), f), 1)
+
   /** Word n-grams of `text` (lowercased), space-joined; empty array when the
     * document has fewer than n words. */
-  private def ngrams(text: Column, n: Int): Column = {
-    val ws = words(lower(text))
-    when(size(ws) < n, array().cast("array<string>")).otherwise(
-      transform(sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + 1, lit(n)), " ")))
-  }
+  private def ngrams(text: Column, n: Int): Column =
+    bind(words(lower(text))) { ws =>
+      when(size(ws) < n, array().cast("array<string>")).otherwise(
+        transform(sequence(lit(0), size(ws) - n),
+          i => array_join(slice(ws, i + 1, lit(n)), " ")))
+    }
 
   /** Gopher top-n-gram character fraction: characters covered by every
     * occurrence of the single most frequent word n-gram, divided by the
@@ -169,28 +176,30 @@ object QualityRules {
     * mirrored exactly by the DuckDB oracle). O(u·g) per document where u =
     * distinct n-grams — fine for web-page-sized documents; corpus-scale
     * outliers should be length-capped upstream (MaxBytes). */
-  def topNgramCharFraction(text: Column, n: Int): Column = {
-    val gs = ngrams(text, n)
-    val best = array_max(transform(array_distinct(gs),
-      d => struct(size(filter(gs, g => g === d)).as("cnt"), d.as("gram"))))
-    when(size(gs) === 0 || length(text) === 0, 0.0).otherwise(
-      r6(best.getField("cnt").cast("double") * length(best.getField("gram")).cast("double")
-        / length(text).cast("double")))
-  }
+  def topNgramCharFraction(text: Column, n: Int): Column =
+    bind(ngrams(text, n)) { gs =>
+      val best = array_max(transform(array_distinct(gs),
+        d => struct(size(filter(gs, g => g === d)).as("cnt"), d.as("gram"))))
+      bind(best) { b =>
+        when(size(gs) === 0 || length(text) === 0, 0.0).otherwise(
+          r6(b.getField("cnt").cast("double") * length(b.getField("gram")).cast("double")
+            / length(text).cast("double")))
+      }
+    }
 
   /** Gopher duplicate-n-gram character fraction: characters covered by all
     * occurrences of every n-gram that appears more than once, divided by the
     * document's character count (occurrence-weighted, the common public
     * implementation; overlapping spans are counted per occurrence). */
-  def dupNgramCharFraction(text: Column, n: Int): Column = {
-    val gs = ngrams(text, n)
-    val dupChars = aggregate(
-      array_distinct(gs), lit(0L),
-      (acc, d) => {
-        val cnt = size(filter(gs, g => g === d))
-        acc + when(cnt > 1, cnt.cast("long") * length(d).cast("long")).otherwise(0L)
-      })
-    when(size(gs) === 0 || length(text) === 0, 0.0).otherwise(
-      r6(dupChars.cast("double") / length(text).cast("double")))
-  }
+  def dupNgramCharFraction(text: Column, n: Int): Column =
+    bind(ngrams(text, n)) { gs =>
+      val dupChars = aggregate(
+        array_distinct(gs), lit(0L),
+        (acc, d) => {
+          val cnt = size(filter(gs, g => g === d))
+          acc + when(cnt > 1, cnt.cast("long") * length(d).cast("long")).otherwise(0L)
+        })
+      when(size(gs) === 0 || length(text) === 0, 0.0).otherwise(
+        r6(dupChars.cast("double") / length(text).cast("double")))
+    }
 }

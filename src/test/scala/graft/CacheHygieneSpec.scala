@@ -42,7 +42,7 @@ class CacheHygieneSpec extends SparkSuite {
   for (name <- leakProne)
     test(s"$name leaves no cacheManager entry after materialization") {
       spark.catalog.clearCache() // isolate from other suites on the shared session
-      SparkEntry.queries(name)(spark, sfDir).count()
+      SparkEntry(name).build(spark, sfDir).count()
       assert(spark.sharedState.cacheManager.isEmpty,
         s"$name left Dataset-level cache entries behind — a library persist " +
           "with no releasing caller; route shared intermediates through " +

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import graft.registry.Check
 
 /** Regression pins for the rows-only queries — the ones whose DuckDB
   * oracle cannot mirror the Spark computation (LSH bucket membership,
@@ -10,8 +11,8 @@ import org.apache.spark.sql.Row
   * query's full sorted result at sf0.01 (the driver's gate scale) is
   * pinned here as a content hash over a canonical rendering.
   *
-  * The pinned set is derived from SparkEntry itself
-  * (`queries.keySet -- oracleSql.keySet`), so ADDING a rows-only query
+  * The pinned set is derived from the registry itself (every case whose
+  * check is `RowsOnly`), so ADDING a rows-only query
   * without pinning it fails this spec rather than slipping through.
   *
   * Re-derive a hash ONLY with an explicit fixture-update commit: run the
@@ -28,7 +29,7 @@ class RowsOnlyPinSpec extends SparkSuite {
     // ±1 splitmix64 hyperplanes regenerate as SQL literals); r14 graduated
     // q_ivf_topk (seedCentroids picks committed as oracle literals) and
     // q_dedup_incremental (word-token minhash mirrored in HUGEINT); r15
-    // moved q_dedup_minhash to benchExtra — its full-path correctness
+    // made q_dedup_minhash timed-only — its full-path correctness
     // home is now the oracle-checked q_minhash_oracle clamp, and its
     // corpus-scale content pin lives in the dedicated test below
     "q_pipeline_e2e" -> "bbc1d1cba93be09a16c0ff961a4aa0c1",
@@ -48,7 +49,7 @@ class RowsOnlyPinSpec extends SparkSuite {
   }
 
   private def contentHash(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
+    val df = SparkEntry(name).build(spark, sfDir)
     val lines = df.collect().map(r => render(r)).sorted
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(lines.mkString("\n").getBytes("UTF-8"))
@@ -56,7 +57,7 @@ class RowsOnlyPinSpec extends SparkSuite {
   }
 
   test("every rows-only query is pinned (no unpinned rows-only entries)") {
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val rowsOnly = SparkEntry.cases.filter(_.check == Check.RowsOnly).map(_.name).toSet
     assert(rowsOnly == pinned.keySet,
       s"rows-only set drifted: unpinned=${rowsOnly -- pinned.keySet}, " +
         s"stale pins=${pinned.keySet -- rowsOnly}")
@@ -72,17 +73,13 @@ class RowsOnlyPinSpec extends SparkSuite {
     }
   }
 
-  test("q_dedup_minhash (benchExtra) sf0.01 content hash is pinned") {
+  test("q_dedup_minhash (timed-only) sf0.01 content hash is pinned") {
     // bench-only since r15, but the content pin STAYS: this self-similar
     // corpus is the one input where the hot-bucket guard actually fires,
     // which no SQL-mirrorable clamp can cover — the hash is the guard's
     // regression tripwire (same render/hash as the rows-only pins; the
     // pinned value is unchanged from the query's rows-only era)
-    val df = SparkEntry.benchExtra("q_dedup_minhash")(spark, sfDir)
-    val lines = df.collect().map(render).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(lines.mkString("\n").getBytes("UTF-8"))
-    val actual = md.digest().map("%02x".format(_)).mkString
+    val actual = contentHash("q_dedup_minhash")
     assert(actual == "ed543d124949ebe2ce229b43bcd07ec3",
       s"q_dedup_minhash content drifted: computed $actual")
   }

@@ -48,5 +48,6 @@ object SparkSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", Harness.tempWarehouse())
     .getOrCreate()
 }

@@ -37,36 +37,30 @@ class LayoutSpec extends SparkSuite {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("writeBucketed alignment guard: small input aligns to `buckets` files, " +
-      "large-estimate input keeps task parallelism") {
+  test("writeBucketed: small input aligns to `buckets` files") {
     def dataFiles(table: String): Int = {
       val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
         .find(_.getString(0) == "Location").get.getString(1)
       new java.io.File(new java.net.URI(loc)).listFiles()
         .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     }
-    // small input (well under the 512 MB/bucket default): auto-align →
-    // exactly `buckets` files even from a many-partition input
+    // well under 512 MB per bucket: exactly `buckets` files even from a
+    // many-partition input
     val wide = lineitem.select("l_orderkey", "l_quantity").repartition(8)
     Layout.writeBucketed(wide, "li_align", 4, Seq("l_orderkey"))
     assert(dataFiles("li_align") == 4)
-    // force the estimate over the threshold: the guard must SKIP the
-    // alignment repartition and keep the input's task parallelism
-    // (8 tasks × up-to-4 buckets ⇒ more than 4 files)
-    spark.conf.set("spark.graft.layout.alignMaxBucketBytes", "1")
-    try {
-      Layout.writeBucketed(wide, "li_noalign", 4, Seq("l_orderkey"))
-      assert(dataFiles("li_noalign") > 4)
-    } finally spark.conf.unset("spark.graft.layout.alignMaxBucketBytes")
-    // explicit override beats the estimate both ways
-    Layout.writeBucketed(wide, "li_align2", 4, Seq("l_orderkey"),
-      align = Some(true))
-    assert(dataFiles("li_align2") == 4)
-    // aligned and unaligned tables hold the same rows (bucket layout is
-    // physical only)
-    assert(spark.table("li_noalign").count() == spark.table("li_align").count())
-    Seq("li_align", "li_noalign", "li_align2")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    assert(spark.table("li_align").count() == lineitem.count())
+    spark.sql("DROP TABLE IF EXISTS li_align")
+  }
+
+  test("alignBuckets: unsorted writes align up to the per-bucket cap, sorted always") {
+    val cap = BigInt(Layout.AlignMaxBucketBytes)
+    assert(Layout.alignBuckets(cap * 4, 4, sorted = false))
+    assert(!Layout.alignBuckets(cap * 4 + 1, 4, sorted = false))
+    assert(Layout.alignBuckets(cap * 4, 4, sorted = true))
+    assert(Layout.alignBuckets(cap * 4 + 1, 4, sorted = true))
+    // an unknown estimate (Long.MaxValue) keeps the input's parallelism
+    assert(!Layout.alignBuckets(BigInt(Long.MaxValue), 4, sorted = false))
   }
 
   test("writeRangeSorted: disjoint per-file ranges, sorted within, range exchange planned") {

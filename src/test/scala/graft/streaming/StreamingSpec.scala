@@ -248,7 +248,7 @@ class StreamingSpec extends SparkSuite {
     // streaming query (file source, state store, watermark) whose result
     // must equal the batch DISTINCT over the same valid split
     val dir = "/root/testdata/sf0.001"
-    val out = graft.SparkEntry.queries("q_stream_dedup")(spark, dir)
+    val out = graft.SparkEntry("q_stream_dedup").build(spark, dir)
       .as[Option[Long]].collect().toSeq
     val batch = spark.read.parquet(s"$dir/events.parquet")
       .filter(col("event_id").isNotNull &&
@@ -260,7 +260,7 @@ class StreamingSpec extends SparkSuite {
     assert(out == batch, "streaming watermark-dedup must equal batch DISTINCT on the key")
     assert(out.nonEmpty)
     // a second invocation works (fresh sink table per run)
-    val again = graft.SparkEntry.queries("q_stream_dedup")(spark, dir).count()
+    val again = graft.SparkEntry("q_stream_dedup").build(spark, dir).count()
     assert(again == out.size)
   }
 
@@ -353,8 +353,8 @@ class StreamingSpec extends SparkSuite {
       .select(unix_micros(col("session_start").cast("timestamp")).as("us"),
         col("user_id"), col("n"))
       .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getLong(2))).toSeq
-    val streamed = rows(graft.SparkEntry.queries("q_stream_session")(spark, dir))
-    val batch = rows(graft.SparkEntry.queries("q_session_window")(spark, dir)
+    val streamed = rows(graft.SparkEntry("q_stream_session").build(spark, dir))
+    val batch = rows(graft.SparkEntry("q_session_window").build(spark, dir)
       .orderBy(col("user_id").asc_nulls_first, col("session_start")))
     assert(streamed.nonEmpty)
     assert(streamed == batch,

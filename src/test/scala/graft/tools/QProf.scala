@@ -25,14 +25,12 @@ object QProf {
   }
   final case class Profile(name: String, cold: Run, warm: Seq[Run])
 
-  private def all = SparkEntry.queries ++ SparkEntry.benchExtra
-
   /** Profiles one query; leaves no cached state behind (every run ends
     * with [[Harness.clearState]], as in Bench). */
   def profile(spark: SparkSession, name: String, sfDir: String, reps: Int,
               planDir: Option[String] = None): Profile = {
     require(reps >= 0, s"reps must be >= 0, got $reps")
-    val fn = all(name)
+    val fn = SparkEntry(name).build
     val sc = spark.sparkContext
     val started = new AtomicInteger
     val listener = new SparkListener {
@@ -71,7 +69,8 @@ object QProf {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = args.lift(2).fold(3)(_.toInt)
     val planDir = args.lift(3)
-    val unknown = names.filterNot(all.contains)
+    val known = SparkEntry.cases.map(_.name).toSet
+    val unknown = names.filterNot(known)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Harness.session()
     def fmt(r: Run) =

@@ -22,7 +22,7 @@ object ScaleCompare {
 
   /** The 20 heaviest harness queries by the r15 warm bench at sf0.1
     * (bench-extra entries excluded from this list), plus the
-    * corpus-scale `q_dedup_minhash` benchExtra as the dedup scale probe
+    * corpus-scale `q_dedup_minhash` timed-only case as the dedup scale probe
     * (the one op whose hot-bucket guard self-similar corpora exercise). */
   val Heaviest: Seq[String] = Seq(
     "q_twopass", "q_pipeline_e2e", "q_frequent_pairs", "q_fuzzy_join",
@@ -54,8 +54,7 @@ object ScaleCompare {
     val names = (if (only.nonEmpty) Heaviest.filter(only) else Heaviest)
     println("query,small_s,small_rows,big_s,big_rows,time_ratio,row_ratio")
     names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        graft.SparkEntry.benchExtra(name))
+      val fn = graft.SparkEntry(name).build
       val (ts, rs) = timed(fn(spark, small).count()); Harness.clearState(spark)
       val (tb, rb) = timed(fn(spark, big).count()); Harness.clearState(spark)
       println(f"[cmp] $name,$ts%.2f,$rs,$tb%.2f,$rb,${tb / ts}%.2f,${rb.toDouble / rs}%.2f")

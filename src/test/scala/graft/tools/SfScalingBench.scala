@@ -10,7 +10,7 @@ import graft.SparkEntry
   * the first real 100×-scale red flag (super-linear candidate growth);
   * a ratio ≤ 10× means the plan priced at or below data volume.
   *
-  * Runs the EXACT harness queries (SparkEntry.queries) against a
+  * Runs the EXACT harness queries (SparkEntry.cases) against a
   * duplicated copy of documents.parquet materialized under /tmp, so
   * there is no drift between what the bench and the gate measure.
   *
@@ -33,9 +33,9 @@ object SfScalingBench {
       .write.mode("overwrite").parquet(s"$dupDir/documents.parquet")
 
     def timeWarm(name: String, dir: String): Double = {
-      SparkEntry.queries(name)(spark, dir).count() // warm: codegen + JIT
+      SparkEntry(name).build(spark, dir).count() // warm: codegen + JIT
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
+      SparkEntry(name).build(spark, dir).count()
       (System.nanoTime() - t0) / 1e9
     }
 

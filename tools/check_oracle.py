@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
-"""Local pre-flight for the driver's correctness gate: run each oracleSql in
-DuckDB against the same testdata and compare with the Verify parquet dumps
-(sorted columns by name, value-level compare)."""
+"""Local pre-flight for the correctness gate: run each oracle SQL of
+Verify's oracle_sql.json in DuckDB against the same testdata and compare with
+the Verify parquet dumps (sorted columns by name, value-level compare).
+
+Exits 1 when any oracle result is not OK (a missing Spark output included)
+or when verify_failed.json names a query."""
 import json, sys, glob, os
 import duckdb
 
@@ -67,7 +70,7 @@ n_ok = sum(1 for v in results.values() if v == "OK")
 for name, v in sorted(results.items()):
     print(f"{'✓' if v == 'OK' else '✗'} {name}: {v}")
 print(f"\n{n_ok}/{len(results)} oracle-matched")
-# rows-only queries (in queries but not oracle)
+# rows-only queries (dumped by Verify, absent from oracle_sql.json)
 for d in sorted(glob.glob(f"{out_dir}/q_*")):
     name = os.path.basename(d)
     if name not in oracle:
@@ -76,9 +79,8 @@ for d in sorted(glob.glob(f"{out_dir}/q_*")):
 # queries that THREW inside Verify (absent above, loud here — the r9
 # q_stream_dedup failure mode: a crash must not read as a small run)
 fail_path = f"{out_dir}/verify_failed.json"
-if os.path.exists(fail_path):
-    failed = json.load(open(fail_path))
-    for name, msg in sorted(failed.items()):
-        print(f"  !! VERIFY-CRASHED {name}: {msg[:200]}")
-    if failed:
-        sys.exit(1)
+failed = json.load(open(fail_path)) if os.path.exists(fail_path) else {}
+for name, msg in sorted(failed.items()):
+    print(f"  !! VERIFY-CRASHED {name}: {msg[:200]}")
+if failed or n_ok != len(results):
+    sys.exit(1)

@@ -63,7 +63,7 @@ for (name <- Seq("flagship_valid_split", "q_required", "q_min", "q_topk_similar"
     "q_cube", "q_pop", "q_sla", "q_zipf", "q_kcore", "q_wilcoxon", "q_cohens_d", "q_kfold",
     "q_minhash_oracle", "q_stream_neardup", "q_date_dayfirst", "q_lsh_recall")) {
   val df = if (name == "flagship_valid_split") flagship
-           else graft.SparkEntry.queries.getOrElse(name, graft.SparkEntry.benchExtra(name))(spark, dir)
+           else graft.SparkEntry(name).build(spark, dir)
   out.println()
   out.println(s"## $name")
   out.println()
