@@ -20,13 +20,15 @@ object Kernels {
     * null guards from re-evaluating a kernel inside scan filters.
     * base64Strict / ipNormalize / uuidNormalize / dotI are EXCLUDED: they
     * return null to signal rejection of non-null input (dotI: dimension
-    * mismatch), so eliding their null check would silently pass bad rows. */
+    * mismatch), so eliding their null check would silently pass bad rows;
+    * so is [[registrableDomain]] (null for IP hosts). */
   val totalKernels: Set[String] = Set(
     "nfc", "unicodeClean", "caseFold", "utf8Truncate", "rollingHash",
     "minhashSig", "minhashSigShingles", "sigAgreement", "dotD", "cosineD",
     "lshBucketD", "simHash", "uuidVersion",
     "zValue2", "zValue3", "maxAbsD", "quantizeI8D", "htmlEntityDecode",
-    "percentNormalize", "latin1Misdecode", "fixMojibake")
+    "percentNormalize", "latin1Misdecode", "fixMojibake",
+    "languageId", "qualityScore", "charEntropy")
 
   /** NFC normalization (reference `filters/string.py::Unicode` normalize step). */
   def nfc(s: UTF8String): UTF8String =
@@ -170,12 +172,14 @@ object Kernels {
     if (str.length == 32 && str.forall(c => Character.digit(c, 16) >= 0))
       str = str.substring(0, 8) + "-" + str.substring(8, 12) + "-" + str.substring(12, 16) +
         "-" + str.substring(16, 20) + "-" + str.substring(20)
-    // java.util.UUID.fromString is lenient about component lengths; pin the
-    // canonical 8-4-4-4-12 shape first.
-    if (!str.matches("[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}"))
-      return null
-    UTF8String.fromString(java.util.UUID.fromString(str).toString)
+    // on this shape `UUID.fromString(str).toString` is exactly the
+    // lowercased input, so the shape check is the whole parse
+    if (!UuidShape.matcher(str).matches()) return null
+    UTF8String.fromString(str.toLowerCase(java.util.Locale.ROOT))
   }
+
+  private val UuidShape = java.util.regex.Pattern.compile(
+    "[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
 
   /** UUID version digit (1-5) of an already-canonical UUID string, -1 if malformed. */
   def uuidVersion(s: UTF8String): Int = {
@@ -888,5 +892,208 @@ object Kernels {
     val maxL = math.min(4, math.min(n, m))
     while (l < maxL && s(l) == t(l)) l += 1
     jaro + l * 0.1 * (1.0 - jaro)
+  }
+
+  // ------------------------------------------------------ curation scorers
+  //
+  // One pass per row each: tokenize once, probe hash sets. Kernels, not
+  // Column forms: `filter`/`aggregate` lambdas run interpreted
+  // (`CodegenFallback`) and outside subexpression elimination. Each
+  // result is bit-identical to what the DuckDB oracles compute.
+
+  /** Stopword sets per language for the heuristic scorers
+    * ([[graft.ops.TextAnalysis.stopwords]]). */
+  val Stopwords: Map[String, Seq[String]] = Map(
+    "en" -> Seq("the", "of", "and", "a", "to", "in", "is", "it", "that", "for"),
+    "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "los", "se", "no"),
+    "fr" -> Seq("le", "la", "de", "et", "les", "des", "en", "un", "du", "une"),
+    "de" -> Seq("der", "die", "und", "in", "den", "von", "zu", "das", "mit", "sich"),
+    "zh" -> Seq("的", "了", "在", "是", "我", "有", "和", "就", "不", "人"))
+
+  /** Language codes in ascending order; bit `k` of a stopword's mask is
+    * set when the word is in `StopLangs(k)`'s set. */
+  private val StopLangs: Array[String] = Stopwords.keys.toArray.sorted
+  private val StopLangsUtf8: Array[UTF8String] = StopLangs.map(UTF8String.fromString)
+  private val Undetermined = UTF8String.fromString("und")
+  private val StopMask: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer]
+    for ((lang, k) <- StopLangs.zipWithIndex; w <- Stopwords(lang))
+      m.merge(w, 1 << k, (a: Integer, b: Integer) => Integer.valueOf(a | b))
+    m
+  }
+  private val MaxStopwordLen = Stopwords.values.flatten.map(_.length).max
+
+  /** Index of `lang` for [[qualityScore]]; throws on a language without
+    * a stopword set. */
+  def stopLangIndex(lang: String): Int = {
+    require(Stopwords.contains(lang), s"no stopword set for language '$lang'")
+    StopLangs.indexOf(lang)
+  }
+
+  /** Java regex `\s` (no UNICODE_CHARACTER_CLASS). */
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
+
+  /** Stopword hits per language (`StopLangs` order) over the tokens of
+    * `split(lower(s), "\\s+", -1)`, with the token count in the last
+    * slot. Tokens are the gaps between whitespace runs, so a leading or
+    * trailing run yields an empty token and "" is one empty token. */
+  private def stopwordHits(s: UTF8String): Array[Int] = {
+    val t = s.toLowerCase.toString
+    val out = new Array[Int](StopLangs.length + 1)
+    val n = t.length
+    var start = 0
+    var nTok = 0
+    while (start <= n) {
+      var end = start
+      while (end < n && !isSpace(t.charAt(end))) end += 1
+      nTok += 1
+      if (end > start && end - start <= MaxStopwordLen) {
+        val m = StopMask.get(t.substring(start, end))
+        if (m != null) {
+          var k = 0
+          while (k < StopLangs.length) {
+            if ((m.intValue & (1 << k)) != 0) out(k) += 1
+            k += 1
+          }
+        }
+      }
+      if (end == n) start = n + 1
+      else {
+        start = end
+        while (start < n && isSpace(t.charAt(start))) start += 1
+      }
+    }
+    out(StopLangs.length) = nTok
+    out
+  }
+
+  /** Stopword-hit language ID: the language whose set hits the most
+    * tokens, ties to the greatest code, zero hits "und". */
+  def languageId(s: UTF8String): UTF8String = {
+    val hits = stopwordHits(s)
+    var best = -1
+    var k = 0
+    while (k < StopLangs.length) {
+      if (hits(k) > 0 && (best < 0 || hits(k) >= hits(best))) best = k
+      k += 1
+    }
+    if (best < 0) Undetermined else StopLangsUtf8(best)
+  }
+
+  /** `floor(x·1e6 + 0.5)` as a long, over 1e6: the library's
+    * cross-engine rounding (see [[graft.ops.TextAnalysis.qualityScore]]). */
+  private def round6(x: Double): Double = Math.floor(x * 1e6 + 0.5).toLong / 1e6
+
+  /** Quality score blend `0.4·min(len/500, 1) + 0.4·stopRatio +
+    * 0.2·(1 − punctRatio)`, rounded by [[round6]]: `len` in code points,
+    * stopRatio = hits of language `lang` ([[stopLangIndex]]) per token,
+    * punctRatio = code points outside `[A-Za-z0-9\s]` per code point. */
+  def qualityScore(s: UTF8String, lang: Int): Double = {
+    val len = s.numChars()
+    val hits = stopwordHits(s)
+    val nTok = hits(StopLangs.length)
+    val str = s.toString
+    var punct = 0
+    var i = 0
+    while (i < str.length) {
+      val cp = str.codePointAt(i)
+      if (!((cp >= 'a' && cp <= 'z') || (cp >= 'A' && cp <= 'Z') ||
+          (cp >= '0' && cp <= '9') || (cp < 128 && isSpace(cp.toChar)))) punct += 1
+      i += Character.charCount(cp)
+    }
+    val lenScore = math.min(len.toDouble / 500.0, 1.0)
+    val stopRatio = hits(lang).toDouble / nTok.toDouble // nTok >= 1
+    val punctRatio = if (len == 0) 0.0 else punct.toDouble / len.toDouble
+    round6(0.4 * lenScore + 0.4 * stopRatio + 0.2 * (1.0 - punctRatio))
+  }
+
+  /** Shannon entropy in bits per character, rounded by [[round6]].
+    * Characters are the byte slices Spark's `substr(i, 1)` yields (one
+    * per `numChars` position); the terms `-p·ln p` (`StrictMath.log`,
+    * as Spark's `ln`) are summed over the distinct characters in
+    * ascending byte order, then divided by ln 2. "" gives 0. */
+  def charEntropy(s: UTF8String): Double = {
+    val b = s.getBytes
+    val nb = b.length
+    if (nb == 0) return 0.0
+    // each character packed big-endian into the high bytes, its length in
+    // the low byte: unsigned order of the keys is the byte order of the
+    // characters (a shorter prefix first)
+    val keys = new Array[Long](nb)
+    var n = 0
+    var i = 0
+    while (i < nb) {
+      val len = math.min(UTF8String.numBytesForFirstByte(b(i)), nb - i)
+      var key = 0L
+      var j = 0
+      while (j < len) { key |= (b(i + j) & 0xffL) << (56 - 8 * j); j += 1 }
+      keys(n) = (key | len) ^ Long.MinValue // signed sort = unsigned order
+      n += 1
+      i += len
+    }
+    java.util.Arrays.sort(keys, 0, n)
+    val total = n.toDouble
+    var acc = 0.0
+    i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n && keys(j) == keys(i)) j += 1
+      val p = (j - i).toDouble / total
+      acc = acc - p * StrictMath.log(p)
+      i = j
+    }
+    round6(acc / 0.6931471805599453)
+  }
+
+  /** Public Suffix List rules split by kind (lowercased): `exacts`
+    * (`co.uk`), `wilds` (`*.ck`, stored as `ck`) and `excs` (`!www.ck`,
+    * stored as `www.ck`). Built once per expression instance
+    * ([[PublicSuffixDomain]]), never per row. */
+  final class PslRules(rules: Seq[String]) {
+    private def set(xs: Seq[String]) = new java.util.HashSet[String](
+      java.util.Arrays.asList(xs.map(_.toLowerCase): _*))
+    val exacts: java.util.HashSet[String] =
+      set(rules.filterNot(r => r.startsWith("*.") || r.startsWith("!")))
+    val wilds: java.util.HashSet[String] = set(rules.filter(_.startsWith("*.")).map(_.drop(2)))
+    val excs: java.util.HashSet[String] = set(rules.filter(_.startsWith("!")).map(_.drop(1)))
+  }
+
+  private val Ipv4Host = java.util.regex.Pattern.compile("^[0-9]{1,3}(\\.[0-9]{1,3}){3}$")
+
+  /** Registrable domain of a lowercased host under PSL rule semantics
+    * (see [[graft.ops.Urls.registrableDomain]]), null for an IPv4 or
+    * bracketed host. Labels are `split(host, "\\.", -1)` (empty labels
+    * kept); with `n` labels, the suffix of depth `i` is the last `i`.
+    * An exception match at depth `i` makes `i` labels registrable;
+    * otherwise the public suffix is the deepest exact match `i` or
+    * wildcard match `i + 1` (default 1) and the domain takes one label
+    * more, capped at `n`. One hash probe per rule kind and depth. */
+  def registrableDomain(host: UTF8String, rules: PslRules): UTF8String = {
+    val h = host.toString
+    if (h.startsWith("[") || Ipv4Host.matcher(h).find()) return null
+    // starts(i - 1): offset of the suffix holding the last i labels
+    var n = 1
+    var k = 0
+    while (k < h.length) { if (h.charAt(k) == '.') n += 1; k += 1 }
+    val starts = new Array[Int](n)
+    var depth = 1
+    k = h.length - 1
+    while (k >= 0) {
+      if (h.charAt(k) == '.') { starts(depth - 1) = k + 1; depth += 1 }
+      k -= 1
+    }
+    var exc = 0
+    var ps = 1
+    var i = 1
+    while (i <= n) {
+      val entry = h.substring(starts(i - 1))
+      if (rules.excs.contains(entry)) exc = i
+      if (rules.exacts.contains(entry)) ps = math.max(ps, i)
+      if (rules.wilds.contains(entry)) ps = math.max(ps, i + 1)
+      i += 1
+    }
+    val regLen = if (exc > 0) exc else math.min(ps + 1, n)
+    if (regLen == n) host else UTF8String.fromString(h.substring(starts(regLen - 1)))
   }
 }

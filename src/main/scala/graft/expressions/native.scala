@@ -117,6 +117,20 @@ object native {
     invoke(LongType, "lshBucketD", Seq(e(v), Literal(bits)),
       Seq(ArrayType(DoubleType), IntegerType))
 
+  def languageId(c: Column): Column =
+    invoke(StringType, "languageId", Seq(e(c)), Seq(StringType))
+
+  def qualityScore(c: Column, stopLang: String): Column =
+    invoke(DoubleType, "qualityScore",
+      Seq(e(c), Literal(Kernels.stopLangIndex(stopLang))), Seq(StringType, IntegerType))
+
+  def charEntropy(c: Column): Column =
+    invoke(DoubleType, "charEntropy", Seq(e(c)), Seq(StringType))
+
+  /** See [[PublicSuffixDomain]]: `host` must already be lowercased. */
+  def registrableDomain(host: Column, pslRules: Seq[String]): Column =
+    GraftSqlShim.column(PublicSuffixDomain(e(host), pslRules))
+
   def htmlEntityDecode(c: Column): Column =
     invoke(StringType, "htmlEntityDecode", Seq(e(c)), Seq(StringType))
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.expressions.native
+import graft.expressions.{Kernels, native}
 
 /** Text analysis operators for training-data pipelines (BASELINE.json
   * mandate, SURVEY.md §2.6): language-ID, quality scoring, token counting,
@@ -22,55 +22,33 @@ object TextAnalysis {
   def subwordCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0))).cast("long")
 
-  /** Stopword sets per language for the heuristic scorers. Tiny on purpose:
-    * these ship inside the expression tree as literals (broadcast-free). */
-  val stopwords: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "of", "and", "a", "to", "in", "is", "it", "that", "for"),
-    "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "los", "se", "no"),
-    "fr" -> Seq("le", "la", "de", "et", "les", "des", "en", "un", "du", "une"),
-    "de" -> Seq("der", "die", "und", "in", "den", "von", "zu", "das", "mit", "sich"),
-    "zh" -> Seq("的", "了", "在", "是", "我", "有", "和", "就", "不", "人"))
-
-  private def hits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(x => x: Any): _*))).cast("long")
+  /** Stopword sets per language for the heuristic scorers. Tiny on
+    * purpose: the kernels hold them as one hash map (broadcast-free). */
+  val stopwords: Map[String, Seq[String]] = Kernels.Stopwords
 
   /** Stopword-hit heuristic language ID: the language whose stopword set
-    * hits the most tokens; zero hits → "und"; ties resolve to the
-    * lexicographically greatest language code (struct-max tiebreak —
-    * deterministic, mirrored exactly by the DuckDB oracle). */
-  def languageId(text: Column): Column = {
-    val toks = tokens(lower(text))
-    val scored = stopwords.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(hits(toks, words).as("hits"), lit(lang).as("lang"))
-    }
-    val best = array_max(array(scored: _*)) // max by (hits, lang)
-    // null guard: null text would otherwise tie all NULL hit counts and
-    // fall through to the lexicographic tiebreak ("zh")
-    when(text.isNull, lit(null).cast("string"))
-      .when(best.getField("hits") === 0, "und")
-      .otherwise(best.getField("lang"))
-  }
+    * hits the most tokens of `split(lower(text), "\\s+")`; zero hits →
+    * "und"; ties resolve to the lexicographically greatest language code
+    * (deterministic, mirrored exactly by the DuckDB oracle); null text →
+    * null. One native kernel pass per row
+    * ([[graft.expressions.Kernels.languageId]]). */
+  def languageId(text: Column): Column = native.languageId(text)
 
-  /** Quality score in [0,1]: blend of length saturation, alpha ratio and
-    * stopword ratio — the classic cheap quality heuristics. Deterministic
-    * double math, rounded for cross-engine comparability. */
-  def qualityScore(text: Column, stopLang: String = "en"): Column = {
-    val toks = tokens(lower(text))
-    val nTok = size(toks).cast("double")
-    val lenScore = least(length(text).cast("double") / 500.0, lit(1.0))
-    val stopRatio = when(nTok === 0, 0.0)
-      .otherwise(hits(toks, stopwords(stopLang)).cast("double") / nTok)
-    val punctRatio = when(length(text) === 0, 0.0)
-      .otherwise(size(regexp_extract_all(text, lit("[^A-Za-z0-9\\s]"), lit(0))).cast("double")
-        / length(text).cast("double"))
-    // floor(x*1e6 + 0.5)/1e6, NOT round(x, 6): engines disagree on how to
-    // round a binary double at a decimal halfway point (Spark rounds the
-    // shortest decimal repr half-up; DuckDB rounds the binary value). The
-    // floor formula is plain double arithmetic — bitwise identical
-    // everywhere, so oracles can reproduce it exactly.
-    val blend = lit(0.4) * lenScore + lit(0.4) * stopRatio + lit(0.2) * (lit(1.0) - punctRatio)
-    floor(blend * 1e6 + 0.5) / 1e6
-  }
+  /** Quality score in [0,1]: blend of length saturation, stopword ratio
+    * and punctuation ratio — the classic cheap quality heuristics — in
+    * one native kernel pass per row
+    * ([[graft.expressions.Kernels.qualityScore]]):
+    * `0.4·min(length/500, 1) + 0.4·stopwordHits/nTokens +
+    * 0.2·(1 − punct/length)`, with punctuation the characters outside
+    * `[A-Za-z0-9\s]`.
+    *
+    * Rounded as floor(x*1e6 + 0.5)/1e6, NOT round(x, 6): engines disagree
+    * on how to round a binary double at a decimal halfway point (Spark
+    * rounds the shortest decimal repr half-up; DuckDB rounds the binary
+    * value). The floor formula is plain double arithmetic — bitwise
+    * identical everywhere, so oracles can reproduce it exactly. */
+  def qualityScore(text: Column, stopLang: String = "en"): Column =
+    native.qualityScore(text, stopLang)
 
   /** Flesch reading ease + Flesch–Kincaid grade (Flesch 1948 / Kincaid
     * et al. 1975 — the published formulas) over deterministic run-count
@@ -121,23 +99,13 @@ object TextAnalysis {
   /** Shannon entropy (bits per character) of the document's character
     * distribution — the classic cheap garbage detector (≈0 for repeated
     * filler, ≈ log2(alphabet) for random bytes; natural English prose sits
-    * near 4.1). O(alphabet × length) per row via the in-row count table
-    * (same contract as the n-gram fraction ops: length-cap outliers
-    * upstream). ln is engine-libm; the 1e-6 floor-round absorbs ulp drift
-    * (the LmScore precedent), and ln 2 is a shared literal, not a call. */
-  def charEntropy(text: Column): Column = {
-    val cs = transform(sequence(lit(1), length(text)), i => text.substr(i, lit(1)))
-    val n = length(text).cast("double")
-    // fold over SORTED distinct chars: both engines then add the partial
-    // terms in the same order, so the float sum is reproducible
-    val ent = aggregate(array_sort(array_distinct(cs)), lit(0.0), (acc, ch) => {
-      val p = size(filter(cs, x => x === ch)).cast("double") / n
-      acc - p * log(p)
-    }) / lit(0.6931471805599453) // ln 2
-    when(text.isNull, lit(null).cast("double"))
-      .when(length(text) === 0, 0.0)
-      .otherwise(floor(ent * 1e6 + 0.5) / 1e6)
-  }
+    * near 4.1). One native kernel pass per row
+    * ([[graft.expressions.Kernels.charEntropy]]): sort the characters,
+    * sum `-p·ln p` over the distinct ones in ascending order — so the
+    * float sum adds in the same order as the oracle's sorted fold — and
+    * divide by the ln 2 literal. ln is engine-libm; the 1e-6 floor-round
+    * absorbs ulp drift (the LmScore precedent). */
+  def charEntropy(text: Column): Column = native.charEntropy(text)
 
   /** PII patterns — deliberately RE2-compatible (no lookaround, no
     * backreferences) so the same pattern strings run identically under

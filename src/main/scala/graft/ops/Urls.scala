@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * of unreserved characters).
   *
   * Everything is a pure `Column` expression over Spark's native string
-  * kernels (`regexp_extract`, `split`, the `filter`/`transform`
-  * higher-order functions) — map-only, codegen-resident, no UDFs; the
-  * only shuffle in the whole family is [[dedupByUrl]]'s one exchange
-  * keyed by the canonical URL.
+  * functions (`regexp_extract`, `split`, the `filter`/`transform`
+  * higher-order functions) and the library's own kernels — map-only, no
+  * UDFs; the only shuffle in the whole family is [[dedupByUrl]]'s one
+  * exchange keyed by the canonical URL.
   *
   * Scope, documented rather than discovered: absolute `scheme://` URLs
   * only (anything else canonicalizes to NULL — a crawl record without
@@ -212,73 +212,28 @@ object Urls {
     * not degenerate to NULL), and IP hosts (v4 dotted-quad or v6
     * bracket) map to NULL — an address has no registrable domain.
     *
-    * Shape: ONE pass over the host's suffix-label chain — each chain
-    * entry (the `array_join(slice(...))` string build) is computed once
-    * per depth, inside a single lambda, with all three rule-set
-    * membership scans against it (the earlier form ran one transform
-    * per rule set, and codegen cannot CSE across lambda bodies, so the
-    * chain was built three times per row). Map-only, codegen-resident,
-    * cost O(labels · |rules|) string compares per row. That is the
-    * right trade at curated-subset size (~200 rules); a full 9k-rule
-    * PSL pushes it to ~50k compares/row — still map-only, but callers
-    * at that size on 100 TB should use [[registrableDomainViaTable]],
-    * the broadcast join of [[hostSuffixes]] against a rules table. */
+    * Shape: one native kernel pass per row
+    * ([[graft.expressions.PublicSuffixDomain]]): the rules are split into
+    * three hash sets once per expression instance, and each row costs
+    * O(labels) suffix substrings with three hash probes each, whatever
+    * the rule count — codegen'd, no interpreted lambdas. The rule list
+    * ships inside the expression with every task (the full PSL is ~9k
+    * short strings); [[registrableDomainViaTable]] keeps it in a
+    * broadcast table instead. */
   def registrableDomain(u: Column, pslRules: Seq[String]): Column =
-    registrableDomainOfHost(urlHost(u), pslRules)
+    graft.expressions.native.registrableDomain(urlHost(u), pslRules)
 
   /** [[registrableDomain]] over a [[parseUrl]] struct. */
   def registrableDomainParsed(p: Column,
       pslRules: Seq[String] = DefaultPublicSuffixRules): Column =
-    registrableDomainOfHost(urlHostParsed(p), pslRules)
+    graft.expressions.native.registrableDomain(urlHostParsed(p), pslRules)
 
-  private def registrableDomainOfHost(host: Column,
-                                      pslRules: Seq[String]): Column = {
-    val exacts = pslRules.filterNot(r => r.startsWith("*.") || r.startsWith("!"))
-      .map(_.toLowerCase)
-    val wilds = pslRules.filter(_.startsWith("*.")).map(_.drop(2).toLowerCase)
-    val excs = pslRules.filter(_.startsWith("!")).map(_.drop(1).toLowerCase)
-    val labels = split(host, "\\.")
-    val n = size(labels)
-    def member(set: Seq[String], e: Column): Column =
-      if (set.isEmpty) lit(false) else array_contains(typedLit(set), e)
-    // ONE fold over depths 1..n with a finish lambda: the accumulator
-    // carries (deepest exception match, deepest public-suffix match) as
-    // suffix LENGTHS — a wildcard parent match at depth i makes depth
-    // i+1 the public suffix — and the finish computes the domain from
-    // the final accumulator. Every suffix-string build and rule scan
-    // evaluates EXACTLY once per row: the earlier array_max-over-
-    // transform form referenced the per-depth array three times under a
-    // conditional, where codegen subexpression elimination does not
-    // apply, tripling the per-row rule work (measured in
-    // tools/PslScaleSmoke).
-    val dom = aggregate(
-      sequence(lit(1), n),
-      struct(lit(0).as("exc"), lit(1).as("ps")),
-      (st, i) => {
-        val entry = array_join(slice(labels, -i, i), ".")
-        struct(
-          greatest(st.getField("exc"),
-            when(member(excs, entry), i).otherwise(0)).as("exc"),
-          greatest(st.getField("ps"),
-            when(member(exacts, entry), i).otherwise(0),
-            when(member(wilds, entry), i + 1).otherwise(0)).as("ps"))
-      },
-      st => {
-        val regLen = when(st.getField("exc") > 0, st.getField("exc"))
-          .otherwise(least(st.getField("ps") + 1, n))
-        array_join(slice(labels, -regLen, regLen), ".")
-      })
-    val isIp = host.rlike("^[0-9]{1,3}(\\.[0-9]{1,3}){3}$") ||
-      substring(host, 1, 1) === "["
-    when(host.isNull || isIp, lit(null).cast("string"))
-      .otherwise(dom)
-  }
-
-  /** [[registrableDomain]] for rule lists past literal-embedding size
-    * (the full published PSL is ~9k rules ≈ ~50k string compares/row on
-    * the literal path): explode the host's suffix chain, equi-join a
-    * broadcast rules table, longest-match reduce — identical semantics
-    * to the literal path (spec-asserted equal on
+  /** [[registrableDomain]] with the rules kept in a table rather than
+    * shipped inside the expression (a rule list that already lives in a
+    * table, or one too large to send with every task): explode the
+    * host's suffix chain, equi-join a broadcast rules table,
+    * longest-match reduce — identical semantics to the kernel path
+    * (spec-asserted equal on
     * [[DefaultPublicSuffixRules]]), appended as `outCol`.
     *
     * `rulesDf` holds one PSL rule per row in `rulesCol`, the list's own
@@ -287,10 +242,9 @@ object Urls {
     *
     * Scale shape: the rules table broadcasts (~9k rows); the explode is
     * a ~#labels× row fan-out (hosts run 3–5 labels) feeding a
-    * partial-aggregated groupBy on `idCol` and one id-keyed join back —
-    * per-row rule work drops from O(labels·|rules|) compares to
-    * O(labels) hash probes, the right trade once |rules| is thousands.
-    * Null/IP hosts yield NULL like the literal path; rows are preserved
+    * partial-aggregated groupBy on `idCol` and one id-keyed join back,
+    * so it costs a shuffle the kernel path does not.
+    * Null/IP hosts yield NULL like the kernel path; rows are preserved
     * 1:1 (`posexplode_outer` keeps null-host rows through the
     * round-trip). `idCol` must be unique per row — it is the reassembly
     * key. */

@@ -23,7 +23,7 @@ class HarnessSpec extends SparkSuite {
       for (r <- p.cold +: p.warm) {
         assert(r.buildS > 0 && r.execS > 0, r)
         assert(r.buildJobs >= 1, s"build launched no job (pin and schema read): $r")
-        assert(r.execJobs >= 1, s"count() launched no job: $r")
+        assert(r.execJobs >= 1, s"noop write launched no job: $r")
       }
       assertClean()
     }

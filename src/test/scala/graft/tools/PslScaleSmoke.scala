@@ -3,10 +3,11 @@ package graft.tools
 import org.apache.spark.sql.functions._
 import graft.ops.Urls
 
-/** Measures the claim in [[graft.ops.Urls.registrableDomain]]'s scaladoc:
-  * the literal-array path is right at curated-subset size (~200 rules)
-  * and [[graft.ops.Urls.registrableDomainViaTable]] is right at full-PSL
-  * size (~9k rules). Synthetic rules in the real list's shape (two-level
+/** Times [[graft.ops.Urls.registrableDomain]]'s kernel path (rule hash
+  * sets inside the expression) against
+  * [[graft.ops.Urls.registrableDomainViaTable]] (broadcast rules table)
+  * at curated-subset size (~200 rules) and full-PSL size (~9k rules).
+  * Synthetic rules in the real list's shape (two-level
   * ccTLD suffixes + a wildcard/exception tail), 500k URLs over hosts of
   * 2–5 labels, both paths timed warm at both rule sizes, results
   * asserted EQUAL row-for-row first.
@@ -55,7 +56,7 @@ object PslScaleSmoke {
       // timed warm (plans already codegen'd by the equivalence run);
       // aggregate OVER the domain so column pruning cannot skip the
       // computation (a bare count() prunes the projection to nothing)
-      time(s"|rules|=$n literal-array path, 500k urls") {
+      time(s"|rules|=$n kernel path, 500k urls") {
         lit0.agg(sum(length(col("domain")))).collect()
       }
       time(s"|rules|=$n broadcast-join path, 500k urls") {

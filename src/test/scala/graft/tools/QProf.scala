@@ -11,8 +11,10 @@ import graft.{Harness, SparkEntry}
 /** Per-query profile over the harness session. Each query runs once cold
   * and `reps` times warm; each run is split into build (DataFrame
   * construction, including eager `Checkpoints.pin` jobs and the
-  * schema-inference job of every parquet read) and execute (`count()`,
-  * the action Bench times), with the Spark jobs each phase launched.
+  * schema-inference job of every parquet read) and execute (a write to
+  * the `noop` sink, which evaluates every output column — `count()` would
+  * prune the projection and hide a cost that lives in the output
+  * expressions), with the Spark jobs each phase launched.
   * `planDir` receives each query's formatted plan as `<query>.txt`.
   *
   * `Test/runMain graft.tools.QProf <sfDir> <q1,q2> [reps] [planDir]`
@@ -44,7 +46,7 @@ object QProf {
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
       val j1 = jobs()
-      df.count()
+      df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       val j2 = jobs()
       for (dir <- planDir if dumpPlan) {
@@ -75,7 +77,7 @@ object QProf {
     val spark = Harness.session()
     def fmt(r: Run) =
       f"${r.totalS}%7.2f s  build ${r.buildS}%6.2f s ${r.buildJobs}%3d jobs  " +
-        f"exec ${r.execS}%6.2f s ${r.execJobs}%3d jobs"
+        f"noop write ${r.execS}%6.2f s ${r.execJobs}%3d jobs"
     for (name <- names) {
       val p = profile(spark, name, sfDir, reps, planDir)
       println(f"[qprof] $name%-28s cold   ${fmt(p.cold)}")
