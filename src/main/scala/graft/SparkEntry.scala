@@ -38,6 +38,15 @@ object SparkEntry {
   private[graft] def TR(s: SparkSession, dir: String, n: String): DataFrame =
     rebalanceScan(s, T(s, dir, n), s"$dir/$n.parquet")
 
+  /** Directory for case `name`'s round-trip files, under the session's
+    * warehouse — a per-run temp dir in [[Harness.session]] and the test
+    * session — so two runs on one host never write over each other and
+    * nothing outlives the JVM. */
+  private[graft] def scratchDir(s: SparkSession, name: String): String = {
+    val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
+    new java.io.File(warehouse.toUri.getPath, s"scratch/$name").getAbsolutePath
+  }
+
   /** Parquet bytes below which a scan split is not worth its own task, so
     * dimension tables don't fan out into empty tasks. */
   private val MinTaskBytes = 8192L

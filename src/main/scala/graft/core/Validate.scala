@@ -4,6 +4,7 @@ import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.expressions.OwnMethod
 
 /** DataFrame-level validation session — the Spark re-expression of the
@@ -110,23 +111,23 @@ object Validate {
     * order. */
   def columns(df: DataFrame, specs: (String, Validator)*): ValidationResult = {
     val all = specs.map { case (c, v) => Spec(c, v, c) }
-    val useBarrier = specs.exists(_._2.needsBarrier)
-    // Barrier pushdown hybrid: the barrier blocks EVERY conjunct of the
-    // split filter from reaching the scan, including the free IsNotNull a
-    // leading Required implies. Re-derive those input-level facts and plant
-    // them BELOW the validation projections (directly on the source) for
-    // the valid split — they push to parquet; the dropped rows were invalid
-    // by construction. invalid/flagged/failFast must see every row, so only
-    // `valid` uses the pre-filtered twin, and only `valid` builds it. Only
-    // a column's first chain sees the raw input: a later chain of the same
-    // column starts from a cleaned value (which Optional may have filled).
+    // Pushdown twin: the split barrier (see ValidationResult) blocks EVERY
+    // conjunct of the split filter from reaching the scan, including the
+    // free IsNotNull a leading Required implies. Re-derive those
+    // input-level facts and plant them BELOW the validation projections
+    // (directly on the source) for the valid split — they push to parquet;
+    // the dropped rows were invalid by construction. invalid/flagged/
+    // failFast must see every row, so only `valid` uses the pre-filtered
+    // twin, and only `valid` builds it. Only a column's first chain sees
+    // the raw input: a later chain of the same column starts from a
+    // cleaned value (which Optional may have filled).
     val prev = continues(df, all)
     val pushed = all.indices.filter(prev(_).isEmpty)
       .flatMap(i => all(i).v.pushedPredicate(df(s"`${all(i).colName}`")))
     val pushedValid =
-      if (useBarrier && pushed.nonEmpty) Some(() => annotate(df.filter(pushed.reduce(_ && _)), all))
+      if (pushed.nonEmpty) Some(() => annotate(df.filter(pushed.reduce(_ && _)), all))
       else None
-    ValidationResult(annotate(df, all), useBarrier, pushedValid)
+    ValidationResult(annotate(df, all), pushedValid)
   }
 
   def apply(df: DataFrame, specs: (String, Validator)*): ValidationResult =
@@ -136,43 +137,39 @@ object Validate {
 /** Result of a validation run: the annotated DataFrame plus the
   * `is_valid` / `cleaned_data` / `errors` views the reference exposes.
   *
-  * `useBarrier`: a chain's state expressions reference the previous step
-  * ~3×, so when predicate pushdown substitutes the split filter through the
-  * step projections the predicate grows ~3^steps (and filter codegen has no
-  * common-subexpression elimination). Spark pushes even non-deterministic
-  * CONDITIONS through deterministic projects (cardinality is unchanged), so
-  * the only reliable barrier is a non-deterministic PROJECT FIELD that the
-  * filter references: a `spark_partition_id()` tag column with an
-  * always-true predicate on it. Long/heavy chains get the tag; short cheap
-  * chains skip it so their predicates still push into the scan
-  * (e.g. IsNotNull from Required reaches parquet PushedFilters).
+  * Every split (`valid`, `invalid`, `failFast`) filters behind an
+  * optimizer barrier. A chain's state expressions reference the previous
+  * step ~3×, so if predicate pushdown substituted the split filter through
+  * the step projections the predicate would grow ~3^steps (and filter
+  * codegen has no common-subexpression elimination). Spark pushes even
+  * non-deterministic CONDITIONS through deterministic projects (cardinality
+  * is unchanged), so the only reliable barrier is a non-deterministic
+  * PROJECT FIELD that the filter references: a `spark_partition_id()` tag
+  * column with an always-true predicate on it. The filter then reads the
+  * computed `_errors` attribute, once per row, for chains of any length.
   *
   * `pushedValid`: builds the pushdown twin of `df` for [[valid]] (see
-  * `Validate.columns`); called on the first `valid` only, so the other
-  * splits and `ValidatedIO.writeQuarantined` never pay for building it. */
-final case class ValidationResult(df: DataFrame, useBarrier: Boolean = false,
-                                  pushedValid: Option[() => DataFrame] = None) {
+  * `Validate.columns`) — the route by which input-level facts (IsNotNull
+  * from a leading Required) still reach the scan; called on the first
+  * `valid` only, so the other splits never pay for building it. */
+final case class ValidationResult(df: DataFrame, pushedValid: Option[() => DataFrame] = None) {
   import Validate.ErrorsCol
   private val Tag = "__graft_barrier"
   // built on first use: only `valid` reads the pushdown twin
   private lazy val pushedValidDf = pushedValid.map(_())
 
-  private def split(base: DataFrame, cond: Column => Column): DataFrame =
-    if (useBarrier)
-      base.withColumn(Tag, spark_partition_id())
-        .filter(cond(col(ErrorsCol)) && col(Tag) >= 0)
-        .drop(Tag)
-    else base.filter(cond(col(ErrorsCol)))
+  private def split(base: DataFrame, cond: Column): DataFrame =
+    base.withColumn(Tag, spark_partition_id()).filter(cond && col(Tag) >= 0).drop(Tag)
 
   /** Rows with no errors, `_errors` dropped (reference `cleaned_data`).
     * Uses the pushdown twin when present: same rows, but input-level
     * preconditions (IsNotNull from Required) sit below the barrier and
     * reach the scan. */
   def valid: DataFrame =
-    split(pushedValidDf.getOrElse(df), e => size(e) === 0).drop(ErrorsCol)
+    split(pushedValidDf.getOrElse(df), size(col(ErrorsCol)) === 0).drop(ErrorsCol)
 
   /** Rows with at least one error, `_errors` kept (quarantine split). */
-  def invalid: DataFrame = split(df, e => size(e) > 0)
+  def invalid: DataFrame = split(df, size(col(ErrorsCol)) > 0)
 
   /** Flag column instead of a split. */
   def flagged(flag: String = "_valid"): DataFrame =
@@ -198,30 +195,35 @@ final case class ValidationResult(df: DataFrame, useBarrier: Boolean = false,
         raise_error(concat(lit("Invalid value ["), e.getField("key"), lit("/"),
           e.getField("code"), lit("]: "), e.getField("message"))))
         .otherwise(lit(null)))
-    val guarded =
-      if (useBarrier)
-        withAssert.withColumn(Tag, spark_partition_id())
-          .filter(col("_assert").isNull && col(Tag) >= 0).drop(Tag)
-      else withAssert.filter(col("_assert").isNull)
-    guarded.drop("_assert", ErrorsCol)
+    split(withAssert, col("_assert").isNull).drop("_assert", ErrorsCol)
   }
+
+  /** This result over a persisted `df`, for callers that run more than
+    * one action on it (both splits, or a summary plus a split): the source
+    * scan and the chain run once. The pushdown twin is dropped — it is a
+    * DIFFERENT, unpersisted plan, so `valid` reading it would scan and
+    * validate again, and over a persisted frame scan pushdown buys
+    * nothing. The caller unpersists `df` when done. */
+  def persisted(): ValidationResult =
+    ValidationResult(df.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** LogHandler: valid rows pass through; invalid rows are summarized to
     * the supplied logger (per key/code counts — bounded driver traffic,
-    * never the rows themselves). The annotated frame is persisted so the
-    * summary job and the caller's subsequent action on the returned frame
-    * share one source scan + validation; call `.unpersist()` on `df` when
-    * done, or use `observed()` + [[Metrics]] for a zero-extra-job variant. */
+    * never the rows themselves). The annotated frame is persisted
+    * ([[persisted]]) so the summary job and the caller's subsequent action
+    * on the returned frame share one source scan + validation; call
+    * `.unpersist()` on `df` when done, or use `observed()` + [[Metrics]]
+    * for a zero-extra-job variant. */
   def logInvalid(log: String => Unit): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try errorCodes.collect().foreach { r =>
+    val cached = persisted()
+    try cached.errorCodes.collect().foreach { r =>
       log(s"[graft] ${r.getAs[String]("key")}/${r.getAs[String]("code")}: ${r.getAs[Long]("n")} invalid")
     } catch {
       // don't leak the cached frame when the summary job fails — the
       // caller never gets a handle to unpersist it
       case NonFatal(e) => df.unpersist(); throw e
     }
-    valid
+    cached.valid
   }
 
   /** Per-run metric counters via `Dataset.observe` (no extra job): rows

@@ -42,20 +42,6 @@ trait Validator { self =>
     case other => Seq(other)
   }
 
-  /** Per-leaf cost classification for [[needsBarrier]]. Structural
-    * combinators default to heavy; wrappers (Templated) delegate to what
-    * they wrap so a message override doesn't reclassify a cheap filter. */
-  def leafHeavy: Boolean = true
-
-  /** Whether split filters over this validator's output need an optimizer
-    * barrier: inlining a chain via predicate pushdown costs ~3^steps, so
-    * anything beyond a short cheap chain is cheaper evaluated behind its
-    * projections. */
-  def needsBarrier: Boolean = {
-    val leaves = flattened
-    leaves.size >= 3 || (leaves.size >= 2 && leaves.exists(_.leafHeavy))
-  }
-
   /** Alias for `|` for readers who prefer words. */
   def and(next: Validator): Validator = self | next
 
@@ -63,9 +49,9 @@ trait Validator { self =>
     * chain produced no errors" — e.g. `IsNotNull` for a leading [[Required]].
     * `Validate.columns` conjoins it BELOW the validation projections for the
     * valid split, so it reaches the parquet scan (null-page row-group
-    * skipping) even when the chain's own split filter sits behind the
-    * optimizer barrier. Only the chain's first step can speak for the raw
-    * input: later steps see coerced values. */
+    * skipping) although the chain's own split filter sits behind the
+    * optimizer barrier ([[ValidationResult]]). Only the chain's first step
+    * can speak for the raw input: later steps see coerced values. */
   def pushedPredicate(in: Column): Option[Column] = None
 
   /** Override error MESSAGES by code — the reference's per-class
@@ -107,8 +93,6 @@ final case class Templated(inner: Validator, overrides: Map[String, String]) ext
   val name = inner.name
   override def flattened: Seq[Validator] =
     if (inner.flattened.sizeIs > 1) inner.flattened.map(Templated(_, overrides)) else Seq(this)
-  override def needsBarrier: Boolean = inner.needsBarrier
-  override def leafHeavy: Boolean = inner.leafHeavy
   override def pushedPredicate(in: Column): Option[Column] = inner.pushedPredicate(in)
   def step(v: Column, e: Column, key: Column): (Column, Column) = {
     val (nv, ne) = inner.step(v, e, key)
@@ -139,12 +123,6 @@ abstract class ScalarFilter extends Validator {
   /** Error code recorded when `invalid` holds. */
   def code: String
 
-  /** Whether this filter's per-value work is expensive (parsing, regex,
-    * decimal math, kernel calls). Chains containing heavy steps get an
-    * optimizer barrier on their split filters — the non-deterministic tag
-    * field in [[ValidationResult]] (see its scaladoc). */
-  def heavy: Boolean = false
-  override def leafHeavy: Boolean = heavy
   def message: Column = lit(defaultMessage)
   protected def defaultMessage: String = "This value is invalid."
 

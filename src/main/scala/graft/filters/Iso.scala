@@ -63,7 +63,6 @@ case class Currency() extends ScalarFilter {
   * Reference: `filters-iso` extension `Locale`. */
 case class LocaleTag() extends ScalarFilter {
   val name = "LocaleTag"
-  override def heavy = true
   val code = "invalid_locale"
   override protected def defaultMessage = "This value is not a valid locale tag."
   private val shape = "^[A-Za-z]{2,8}(-[A-Za-z0-9]{1,8})*$"

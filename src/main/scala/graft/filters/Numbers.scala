@@ -11,7 +11,6 @@ import graft.expressions.native
   * Reference: `filters/number.py::Int` (which routes through `Decimal`). */
 case class Int() extends ScalarFilter {
   val name = "Int"
-  override def heavy = true
   val code = "not_int"
   override protected def defaultMessage = "This value must be a whole number."
   private def dec(v: Column) = native.tryCast(v, DecimalType(38, 18))
@@ -30,7 +29,6 @@ case class Int() extends ScalarFilter {
   * Reference: `filters/number.py::Decimal` (max_precision ≈ scale pin). */
 case class Decimal(precision: scala.Int = 38, scale: scala.Int = 18) extends ScalarFilter {
   val name = "Decimal"
-  override def heavy = true
   val code = "not_numeric"
   override protected def defaultMessage = "This value must be a finite number."
   private def dec(v: Column) = native.tryCast(v, DecimalType(precision, scale))

@@ -12,7 +12,6 @@ import graft.expressions.native
 case class Strip(leading: String = "[\\p{C}\\s]+", trailing: String = "[\\p{C}\\s]+")
     extends ScalarFilter {
   val name = "Strip"
-  override def heavy = true
   val code = "unused"
   // non-capturing group: without it an alternation pattern would unbind
   // the ^/$ anchors and strip interior matches
@@ -24,7 +23,6 @@ case class Strip(leading: String = "[\\p{C}\\s]+", trailing: String = "[\\p{C}\\
   * Reference: `filters/string.py::CaseFold`. */
 case class CaseFold() extends ScalarFilter {
   val name = "CaseFold"
-  override def heavy = true
   val code = "unused"
   override protected def clean(v: Column) = native.caseFold(v)
 }
@@ -36,7 +34,6 @@ case class CaseFold() extends ScalarFilter {
   * Reference: `filters/string.py::Unicode`. */
 case class Unicode(normalize: Boolean = true) extends ScalarFilter {
   val name = "Unicode"
-  override def heavy = true
   val code = "bad_encoding"
   // string inputs round-trip to valid UTF-8 bytes, so this only fires for
   // genuinely undecodable binary payloads
@@ -50,7 +47,6 @@ case class Unicode(normalize: Boolean = true) extends ScalarFilter {
   * builtin `unbase64`). Reference: `filters/string.py::Base64Decode`. */
 case class Base64Decode() extends ScalarFilter {
   val name = "Base64Decode"
-  override def heavy = true
   val code = "not_base64"
   override protected def defaultMessage = "This value is not valid base64."
   override protected def invalid(v: Column) = native.base64Strict(v).isNull
@@ -80,7 +76,6 @@ case class ByteArray() extends ScalarFilter {
   * Reference: `filters/simple.py::ByteArray`. */
 case class ByteArrayFromInts() extends ScalarFilter {
   val name = "ByteArrayFromInts"
-  override def heavy = true
   val code = "bad_encoding"
   override protected def defaultMessage = "All elements must be bytes (0-255)."
   // try_cast widens/narrows any integral array to array<int> (tinyint
@@ -97,7 +92,6 @@ case class ByteArrayFromInts() extends ScalarFilter {
   * Reference: `filters/string.py::IpAddress`. */
 case class IpAddress(ipv4: Boolean = true, ipv6: Boolean = false) extends ScalarFilter {
   val name = "IpAddress"
-  override def heavy = true
   val code = "not_ip_address"
   override protected def defaultMessage = "This value is not a valid IP address."
   override protected def invalid(v: Column) = native.ipNormalize(v, ipv4, ipv6).isNull
@@ -109,7 +103,6 @@ case class IpAddress(ipv4: Boolean = true, ipv6: Boolean = false) extends Scalar
   * Reference: `filters/string.py::JsonDecode`. */
 case class JsonDecode(schemaDdl: String) extends ScalarFilter {
   val name = "JsonDecode"
-  override def heavy = true
   val code = "not_json"
   override protected def defaultMessage = "This value is not valid JSON."
   // Two-part check: the variant parser catches malformed JSON (from_json
@@ -131,7 +124,6 @@ case class JsonDecode(schemaDdl: String) extends ScalarFilter {
   * `variant_get(col, "$.path", "type")`. */
 case class JsonDecodeVariant() extends ScalarFilter {
   val name = "JsonDecodeVariant"
-  override def heavy = true
   val code = "not_json"
   override protected def defaultMessage = "This value is not valid JSON."
   override protected def invalid(v: Column) = try_parse_json(v).isNull
@@ -144,7 +136,6 @@ case class JsonDecodeVariant() extends ScalarFilter {
 case class MaxBytes(maxBytes: scala.Int, truncate: Boolean = true, prefix: String = "")
     extends ScalarFilter {
   val name = "MaxBytes"
-  override def heavy = true
   val code = "too_long"
   override protected def defaultMessage = s"This value is longer than $maxBytes bytes."
   override protected def invalid(v: Column) =
@@ -157,7 +148,6 @@ case class MaxBytes(maxBytes: scala.Int, truncate: Boolean = true, prefix: Strin
   * array of matched substrings. Reference: `filters/string.py::Regex`. */
 case class Regex(pattern: String) extends ScalarFilter {
   val name = "Regex"
-  override def heavy = true
   val code = "malformed"
   override protected def defaultMessage = s"This value does not match $pattern."
   override protected def invalid(v: Column) =
@@ -173,7 +163,6 @@ case class Regex(pattern: String) extends ScalarFilter {
   * our behavior is pinned here and by `MiscFiltersSpec`). */
 case class Split(pattern: String, keys: Seq[String] = Nil) extends ScalarFilter {
   val name = "Split"
-  override def heavy = true
   val code = "wrong_count"
   override protected def defaultMessage =
     s"Expected exactly ${keys.size} parts."
@@ -191,7 +180,6 @@ case class Split(pattern: String, keys: Seq[String] = Nil) extends ScalarFilter 
   * Reference: `filters/string.py::Uuid`. */
 case class Uuid(version: Option[scala.Int] = None) extends ScalarFilter {
   val name = "Uuid"
-  override def heavy = true
   val code = "not_uuid"
   override protected def defaultMessage = "This value is not a valid UUID."
   override protected def invalid(v: Column) = {
@@ -235,7 +223,6 @@ class Datetime(val timezone: String = "UTC", val formats: Seq[String] = Nil,
                val lenient: Boolean = false, val dayFirst: Boolean = false)
     extends ScalarFilter {
   val name = "Datetime"
-  override def heavy = true
   val code = "not_datetime"
   override protected def defaultMessage = "This value is not a valid date/time."
 

@@ -59,8 +59,11 @@ object Classifier {
     val wArr = lit(weights)
     val total = aggregate(grams, lit(0.0),
       (acc, g) => acc + element_at(wArr, (pmod(hash(g), lit(b)) + 1).cast("int")))
+    // bigrams is empty whenever unigrams is, so this tests size(grams) > 0
+    // without building the gram array (and its bigram lambdas) again —
+    // a filter on the score inlines this expression, uneliminated
     val z = lit(bias) +
-      when(size(grams) > 0, total / size(grams)).otherwise(lit(0.0))
+      when(size(unigrams) > 0, total / size(grams)).otherwise(lit(0.0))
     df.withColumn(scoreCol, lit(1.0) / (lit(1.0) + exp(-z)))
   }
 

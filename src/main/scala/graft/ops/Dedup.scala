@@ -273,6 +273,14 @@ object Dedup {
     array((0 until bands).map(b =>
       xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand))): _*)
 
+  /** `posexplode` of a [[minhashBands]] array, which is never null or
+    * empty, so the `_outer` form yields the same rows. An inner generate
+    * would make the optimizer infer `size(bands) > 0` and push it below the
+    * projection that builds the array: every band re-hashed per row in a
+    * filter (and, over a signature computed in the same stage, the MinHash
+    * kernel run again). */
+  private def explodeBands(bands: Column): Column = posexplode_outer(bands)
+
   /** Near-duplicate candidate pairs via MinHash LSH: band-bucket equi-join,
     * then exact Jaccard on the signatures to filter false positives.
     * Never materializes an all-pairs product. `bands = 0` (the default)
@@ -378,12 +386,12 @@ object Dedup {
       .select(col(idCol).as("id_index"), col(sigCol).as("sig_i"))
       .withColumn("bhs_i", minhashBands(col("sig_i"), b, rpb))
       .select(col("id_index"), col("sig_i"), col("bhs_i"),
-        posexplode(col("bhs_i")).as(Seq("band", "h")))
+        explodeBands(col("bhs_i")).as(Seq("band", "h")))
     val btE = batch.filter(col(sigCol).isNotNull)
       .select(col(idCol).as("id_new"), col(sigCol).as("sig_n"))
       .withColumn("bhs_n", minhashBands(col("sig_n"), b, rpb))
       .select(col("id_new"), col("sig_n"), col("bhs_n"),
-        posexplode(col("bhs_n")).as(Seq("band", "h")))
+        explodeBands(col("bhs_n")).as(Seq("band", "h")))
     val dupEarlier =
       if (b == 1) lit(false)
       else (1 until b).foldLeft(when(col("band") === 0, lit(false))) {
@@ -491,7 +499,7 @@ object Dedup {
       val guarded = Checkpoints.pin {
         // hot-bucket stats: which (band, h) buckets exceed maxBucket, and
         // into how many subs to split them
-        val slim = reps.select(col("id"), posexplode(col("bhs")).as(Seq("band", "h")))
+        val slim = reps.select(col("id"), explodeBands(col("bhs")).as(Seq("band", "h")))
         val wide = slim.groupBy("band", "h").count()
           .filter(col("count") > maxBucket)
           .select(col("band"), col("h"),

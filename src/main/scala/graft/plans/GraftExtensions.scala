@@ -12,7 +12,6 @@ import graft.expressions.Kernels
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => SimplifyValidationFilters)
     ext.injectOptimizerRule(_ => SimplifyKernelNullChecks)
     graft.GraftFunctions.kernelFunctions.foreach { case (name, dt, kernel, pts) =>
       ext.injectFunction((FunctionIdentifier(name),

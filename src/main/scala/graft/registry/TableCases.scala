@@ -2,7 +2,7 @@ package graft.registry
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.SparkEntry.T
+import graft.SparkEntry.{T, scratchDir}
 import graft.core.Validate
 import graft.{filters => F}
 import graft.ops.{Cdc, Layout, Rollups, Sketches}
@@ -167,7 +167,7 @@ private[graft] object TableCases {
       // published data ≡ the source slice in closed form
       val docs = T(s, dir, "documents").filter(col("doc_id") < 500)
         .select("doc_id", "lang", "n_chars")
-      val path = "/tmp/graft_wap_publish"
+      val path = scratchDir(s, "graft_wap_publish")
       val rep = graft.sources.ValidatedIO.writeAudited(docs, path, Seq(
         graft.sources.ValidatedIO.Expect.rowCountBetween(1),
         graft.sources.ValidatedIO.Expect.noNulls("doc_id"),
@@ -428,8 +428,7 @@ private[graft] object TableCases {
       // planted malformed shard → PERMISSIVE schema read →
       // corrupt-record quarantine via the Empty() validator → the valid
       // split must equal the parquet original exactly
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_jsonl_roundtrip").getAbsolutePath
+      val tmp = scratchDir(s, "graft_jsonl_roundtrip")
       T(s, dir, "events").select(col("event_id"), col("user_id"), col("event_type"))
         .coalesce(2).write.mode("overwrite").json(tmp)
       java.nio.file.Files.write(
@@ -456,8 +455,7 @@ private[graft] object TableCases {
       // original. (No planted-corruption variant: ORC's PERMISSIVE
       // corrupt-record column does not exist — a torn ORC file fails at
       // the stripe level, which is the format's own integrity story.)
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_orc_roundtrip").getAbsolutePath
+      val tmp = scratchDir(s, "graft_orc_roundtrip")
       T(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .coalesce(2).write.mode("overwrite").orc(tmp)
@@ -476,8 +474,7 @@ private[graft] object TableCases {
       // unregistered in this distribution), read back through the same
       // validation, equality with the original. Doubles roundtrip
       // bit-exactly (Avro stores IEEE doubles natively, not text).
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_avro_roundtrip").getAbsolutePath
+      val tmp = scratchDir(s, "graft_avro_roundtrip")
       T(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .coalesce(2).write.mode("overwrite")
@@ -500,8 +497,7 @@ private[graft] object TableCases {
       // survive the text roundtrip because Spark renders the
       // shortest-exact decimal and the reader parses it back to the
       // identical IEEE value.
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_xml_roundtrip").getAbsolutePath
+      val tmp = scratchDir(s, "graft_xml_roundtrip")
       T(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .coalesce(2).write.mode("overwrite")
@@ -527,8 +523,7 @@ private[graft] object TableCases {
       // mergeSchema read must union both generations under the evolved
       // schema with nulls backfilled for gen-1 rows — the
       // append-new-columns contract every long-lived dataset depends on.
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_schema_evo").getAbsolutePath
+      val tmp = scratchDir(s, "graft_schema_evo")
       val ev = T(s, dir, "events")
       ev.select(col("event_id"), col("user_id"))
         .coalesce(2).write.mode("overwrite").parquet(tmp + "/g1")
@@ -551,8 +546,7 @@ private[graft] object TableCases {
       // Both garbage lines fail BIGINT parses, the unambiguous malformed
       // class (token-count mismatches are version-sensitive; types are
       // not).
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_csv_roundtrip").getAbsolutePath
+      val tmp = scratchDir(s, "graft_csv_roundtrip")
       T(s, dir, "events").select(col("event_id"), col("user_id"), col("event_type"))
         .coalesce(2).write.mode("overwrite")
         .option("header", "false").csv(tmp)

@@ -1,7 +1,7 @@
 package graft.registry
 
 import org.apache.spark.sql.functions._
-import graft.SparkEntry.T
+import graft.SparkEntry.{T, scratchDir}
 import graft.ops.{Dedup, Layout}
 import graft.registry.Check.TimedOnly
 
@@ -171,8 +171,7 @@ private[graft] object TimedOnlyCases {
       // range-sorted write (disjoint per-file min/max) + a range-predicate
       // read-back that prunes at file/row-group granularity — the timed
       // 1-D layout row next to bucketing's join row
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_rangesorted").getAbsolutePath
+      val tmp = scratchDir(s, "graft_rangesorted")
       graft.ops.Layout.writeRangeSorted(
         T(s, dir, "lineitem").select(col("l_orderkey"), col("l_extendedprice")),
         tmp, numFiles = 8, Seq("l_orderkey"))

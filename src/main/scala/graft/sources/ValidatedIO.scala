@@ -267,16 +267,9 @@ object ValidatedIO {
       val w = df.write.mode("overwrite").format(format)
       if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
     }
-    // two actions consume the same annotated frame — persist it so the
-    // source scan + validator chain runs once, not once per split. Drop
-    // the pushdown twin: it is a DIFFERENT (unpersisted) plan, so keeping
-    // it would silently re-scan + re-validate for the valid split; under
-    // a persisted frame scan pushdown buys nothing anyway. The twin is
-    // built only when `valid` reads it, so dropping it here means it is
-    // never built (no second set of validation projections to analyse).
-    val cached = result.copy(df = result.df
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      pushedValid = None)
+    // two actions consume the same annotated frame: the source scan +
+    // validator chain runs once, not once per split
+    val cached = result.persisted()
     try {
       writer(cached.valid).save(validPath)
       writer(cached.invalid.withColumn(Validate.ErrorsCol,

@@ -117,17 +117,20 @@ object StreamingValidate {
   /** Run a BOUNDED streaming query to completion and return its result:
     * `Trigger.AvailableNow` processes everything the source currently has
     * (respecting per-batch limits), then stops; rows land in an in-memory
-    * sink table. This is the harness/test entry point for TRUE streaming
+    * sink. This is the harness/test entry point for TRUE streaming
     * pipelines — the query goes through the streaming engine (microbatches,
-    * state stores, watermarks), not the batch-parity path. The sink table
-    * is driver-memory: bound the stream (validate → dedup → keys/aggregates)
+    * state stores, watermarks), not the batch-parity path. The sink is
+    * driver-memory: bound the stream (validate → dedup → keys/aggregates)
     * before sinking, exactly as a production job would bound what it
-    * collects. */
+    * collects. The rows are returned as a local frame; the sink's table and
+    * the query's checkpoint directory are removed before returning, so
+    * repeated runs leave nothing behind. */
   def runBounded(stream: DataFrame, outputMode: String = "append",
                  statePartitions: Option[Int] = None): DataFrame = {
     require(stream.isStreaming, "runBounded needs a streaming frame")
     val name = "graft_bounded_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
+    val checkpoint = java.nio.file.Files.createTempDirectory(name).toFile
     // A stateful query PINS its state-store partition count to
     // spark.sql.shuffle.partitions at first start — and every microbatch
     // then pays one store commit PER partition PER stateful operator
@@ -143,14 +146,21 @@ object StreamingValidate {
       spark.conf.set("spark.sql.shuffle.partitions", n.toString)
       p
     }
-    val q =
-      try stream.writeStream.format("memory").queryName(name)
-        .outputMode(outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      finally prev.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
-    q.awaitTermination()
-    spark.table(name)
+    try {
+      val q =
+        try stream.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", checkpoint.toString)
+          .outputMode(outputMode)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        finally prev.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
+      q.awaitTermination()
+      val sink = spark.table(name)
+      spark.createDataFrame(sink.collectAsList(), sink.schema)
+    } finally {
+      spark.catalog.dropTempView(name)
+      org.apache.commons.io.FileUtils.deleteQuietly(checkpoint)
+    }
   }
 
   /** Maintain a [[graft.ops.Cdc.rollupOf]] aggregate from a STREAMING
@@ -323,15 +333,13 @@ object StreamingValidate {
   def quarantine(specs: (String, Validator)*)(
       validSink: DataFrame => Unit, invalidSink: DataFrame => Unit): (DataFrame, Long) => Unit =
     (batch, _) => {
-      val res = Validate.columns(batch, specs: _*)
-      // both sinks consume the same annotated batch — persist so the
-      // micro-batch source read + validator chain runs once, not twice
-      val cached = res.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // both sinks consume the same annotated batch: the micro-batch
+      // source read + validator chain runs once, not twice
+      val cached = Validate.columns(batch, specs: _*).persisted()
       try {
-        val shared = res.copy(df = cached)
-        validSink(shared.valid)
-        invalidSink(shared.invalid)
-      } finally cached.unpersist()
+        validSink(cached.valid)
+        invalidSink(cached.invalid)
+      } finally cached.df.unpersist()
     }
 
   /** Running per-key validation-error stats. */

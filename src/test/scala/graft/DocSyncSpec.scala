@@ -19,4 +19,15 @@ class DocSyncSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"COVERAGE.md cites no row for: ${missing.mkString(", ")}")
   }
+
+  test("every graft/…/*.scala path the design docs cite exists under src/") {
+    val cited = """graft/[A-Za-z0-9_/]+\.scala""".r
+    val stale = for {
+      doc <- Seq("COVERAGE.md", "SCALE.md", "SURVEY.md")
+      path <- cited.findAllIn(java.nio.file.Files.readString(java.nio.file.Path.of(doc))).toSeq.distinct
+      if !Seq("src/main/scala", "src/test/scala").exists(root =>
+        java.nio.file.Files.exists(java.nio.file.Path.of(root, path)))
+    } yield s"$doc: $path"
+    assert(stale.isEmpty, s"cited files that do not exist: ${stale.mkString(", ")}")
+  }
 }

@@ -86,18 +86,40 @@ class HandlersSpec extends SparkSuite {
     assert(res.valid.count() == 2)
   }
 
-  test("templates() does not reclassify a cheap chain as barrier-needing") {
-    val cheap = F.MinLength(2) | F.MinLength(5).templates("too_short" -> "x")
-    assert(!cheap.needsBarrier, "message override must not defeat scan pushdown")
-    val heavy = F.Required() | F.CaseFold().templates("unused" -> "x")
-    assert(heavy.needsBarrier, "heavy leaf stays heavy through the wrapper")
-  }
-
   test("LogHandler: summarizes counts, returns valid rows") {
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     val out = Validate(df, "v" -> F.Required()).logInvalid(lines += _)
     assert(out.count() == 2)
     assert(lines.exists(_.contains("v/empty: 1 invalid")))
+  }
+
+  test("logInvalid and persisted() splits read the cached frame, not the pushdown twin") {
+    val dir = java.nio.file.Files.createTempDirectory("log_invalid").toString
+    Seq((1L, "5"), (2L, "99"), (3L, null), (4L, "25")).toDF("id", "v")
+      .coalesce(1).write.parquet(s"$dir/src")
+    val src = spark.read.parquet(s"$dir/src")
+    val chain = F.Required(graft.filters.Emptiness.never) | F.Int() | F.Min(1) | F.Max(50)
+    // the plan above the cached relation: no scan of the source again
+    def assertCached(split: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = split.queryExecution.executedPlan.toString
+      val top = plan.linesIterator.takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
+      assert(top.contains("InMemoryTableScan") && !top.contains("FileScan"), plan.take(2000))
+    }
+    try {
+      val res = Validate.columns(src, "v" -> chain)
+      assert(res.pushedValid.nonEmpty, "a Required-led chain builds a pushdown twin")
+      val logged = res.logInvalid(_ => ())
+      try {
+        assertCached(logged)
+        assert(logged.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 4L))
+      } finally res.df.unpersist()
+      val cached = Validate.columns(src, "v" -> chain).persisted()
+      try {
+        assert(cached.pushedValid.isEmpty)
+        assertCached(cached.valid)
+        assertCached(cached.invalid)
+      } finally cached.df.unpersist()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("observe publishes row/invalid counters without an extra job") {

@@ -4,17 +4,17 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
-/** Exhaustive equivalence harness for the session-wide
-  * `SimplifyValidationFilters` rule: for a grid of array-CASE/concat
-  * expression shapes over rows covering every null/empty/non-empty
+/** Exhaustive 3-valued-logic harness for the filter shapes validation
+  * splits use (`size(_errors) ⋈ 0` over array CASE/concat trees): for a
+  * grid of such shapes over rows covering every null/empty/non-empty
   * combination, `df.filter(size(shape) ⋈ 0)` must keep EXACTLY the rows
   * whose predicate evaluates true in a plain projection.
   *
-  * The projection oracle is immune to the rule (which only matches Filter
-  * nodes), so any 3VL divergence the rewrite introduces — on ANY branch
-  * shape, taken or untaken — shows up as a row-set diff. This guards the
-  * rule's blast radius: it is injected via GraftExtensions and rewrites
-  * arbitrary user queries, not just graft's own error trees.
+  * The session carries the optimizer rules GraftExtensions injects, and an
+  * injected rule rewrites arbitrary user queries, not just graft's own
+  * error trees; a projection oracle is immune to filter rewrites, so any
+  * 3VL divergence such a rule introduces — on ANY branch shape, taken or
+  * untaken — shows up as a row-set diff.
   */
 class SimplifyRuleEquivalenceSpec extends SparkSuite {
   import spark.implicits._
@@ -63,8 +63,8 @@ class SimplifyRuleEquivalenceSpec extends SparkSuite {
       "gt0" -> (x => size(x) > 0),
       "eq0_flipped" -> (x => lit(0) === size(x)),
       "lt0_flipped" -> (x => lit(0) < size(x)))) {
-      // oracle: evaluate the predicate in a projection (rule matches only
-      // Filter nodes), treat null as drop — SQL filter semantics
+      // oracle: evaluate the predicate in a projection (filter rewrites
+      // do not reach it), treat null as drop — SQL filter semantics
       val expected = rows.select(col("id"), cmp(e).as("keep")).collect()
         .filter(r => !r.isNullAt(1) && r.getBoolean(1)).map(_.getInt(0)).toSet
       val actual = rows.filter(cmp(e)).select("id").as[Int].collect().toSet

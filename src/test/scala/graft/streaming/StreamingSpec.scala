@@ -96,6 +96,49 @@ class StreamingSpec extends SparkSuite {
     assert(good.sorted == Seq(1L) && bad.sorted == Seq(2L, 3L))
   }
 
+  test("foreachBatch quarantine splits read the persisted batch, not the source again") {
+    val dir = java.nio.file.Files.createTempDirectory("quarantine_stream").toString
+    try {
+      Seq((1L, "5"), (2L, "99"), (3L, null), (4L, "25")).toDF("id", "v")
+        .coalesce(1).write.parquet(s"$dir/src")
+      val stream = spark.readStream.schema("id BIGINT, v STRING").parquet(s"$dir/src")
+      val plans = scala.collection.mutable.ArrayBuffer[String]()
+      val ids = scala.collection.mutable.ArrayBuffer[(Boolean, Long)]()
+      def sink(ok: Boolean)(d: org.apache.spark.sql.DataFrame): Unit = {
+        // the plan above the cached relation: no scan of the source again
+        plans += d.queryExecution.executedPlan.toString.linesIterator
+          .takeWhile(!_.contains("InMemoryRelation")).mkString("\n")
+        ids ++= d.select("id").collect().map(r => ok -> r.getLong(0))
+      }
+      val chain = F.Required(graft.filters.Emptiness.never) | F.Int() | F.Min(1) | F.Max(50)
+      val q = stream.writeStream.foreachBatch(
+          StreamingValidate.quarantine("v" -> chain)(sink(true), sink(false)))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(ids.sorted.toSeq == Seq(false -> 2L, false -> 3L, true -> 1L, true -> 4L))
+      assert(plans.size == 2)
+      plans.foreach(p => assert(p.contains("InMemoryTableScan") && !p.contains("FileScan"), p))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("runBounded leaves no sink table and no checkpoint directory behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def dirs = tmp.list().filter(_.startsWith("graft_bounded_")).toSet
+    def tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_bounded_")).toSet
+    val dirsBefore = dirs
+    val dir = java.nio.file.Files.createTempDirectory("bounded_src").toString
+    try {
+      Seq(1L, 2L, 3L).toDF("k").coalesce(1).write.parquet(s"$dir/src")
+      val stream = spark.readStream.schema("k BIGINT").parquet(s"$dir/src")
+      val out = StreamingValidate.runBounded(stream)
+      assert(tables.isEmpty, s"sink tables left: $tables")
+      assert((dirs -- dirsBefore).isEmpty, s"checkpoint dirs left: ${dirs -- dirsBefore}")
+      // the returned frame outlives its sink
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("stateful per-key error rates via flatMapGroupsWithState") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]

@@ -10,8 +10,9 @@ out.println()
 out.println("`executedPlan` for the scale-sensitive queries; see SCALE.md for the")
 out.println("design rationale each plan demonstrates. Regenerate with tools/gen_plans.scala.")
 val dir = "/root/testdata/sf0.01"
-// flagship 4-step chain's valid split: the barrier pushdown hybrid must
-// show PushedFilters: [IsNotNull(l_quantity)] on the scan
+// flagship 4-step chain's valid split: the split filter sits behind the
+// barrier, and the pushdown twin must show
+// PushedFilters: [IsNotNull(l_quantity)] on the scan
 val flagship: org.apache.spark.sql.DataFrame = {
   import org.apache.spark.sql.functions._
   val li = spark.read.parquet(s"$dir/lineitem.parquet")
